@@ -16,8 +16,8 @@ Two layers:
   (map2db.py:1086-1090, 1174-1181).
 
 Everything is per-feature coordinate logic — no GEOS required — and
-runs inside a groupBy(fid).applyInPandas kernel, so it parallelizes
-per feature key.
+runs inside a mapInPandas kernel over one row per feature
+(operators/linemerge.py), so it parallelizes per feature.
 """
 
 from __future__ import annotations

@@ -163,7 +163,7 @@ def make_consolidate_kernel(header: MapHeader):
     return consolidate_rows
 
 
-def consolidate(features, header: MapHeader, num_partitions: int | None = None):
+def consolidate(features, header: MapHeader):
     """dbl-map consolidation: features DF -> one row per (ftype, fid).
 
     Execution shape: hash-repartition on the key, then ONE
@@ -175,10 +175,7 @@ def consolidate(features, header: MapHeader, num_partitions: int | None = None):
     Still exactly one shuffle on (ftype, fid).
 
     Memory: a task materializes its partition's sightings in pandas.
-    By default the shuffle uses spark.sql.shuffle.partitions and AQE
-    coalesces it; pass num_partitions explicitly when a partition's
-    sightings wouldn't fit executor memory (that pins the count and
-    bypasses AQE).
+    The shuffle uses spark.sql.shuffle.partitions and AQE coalesces it.
 
     Returns the consolidated DataFrame with a ``violation`` column;
     callers filter ``violation IS NULL`` for good rows and surface the
@@ -245,11 +242,7 @@ def consolidate(features, header: MapHeader, num_partitions: int | None = None):
         else:
             yield multi_out
 
-    dbl = features.where("fid IS NOT NULL")
-    if num_partitions:
-        parted = dbl.repartition(num_partitions, "ftype", "fid")
-    else:
-        parted = dbl.repartition("ftype", "fid")
+    parted = features.where("fid IS NOT NULL").repartition("ftype", "fid")
     return parted.mapInPandas(kernel, schema=CONSOLIDATED_SCHEMA)
 
 
@@ -278,17 +271,3 @@ def assign_ids(features, spark=None):
         "fid", (F.row_number().over(w) - 1).cast("long")
     )
 
-
-def violation_stats(consolidated) -> "pd.DataFrame":
-    """A6-style diagnostic counters from the consolidation output."""
-    from pyspark.sql import functions as F
-
-    return (
-        consolidated.groupBy("ftype")
-        .agg(
-            F.count(F.lit(1)).alias("n_features"),
-            F.sum(F.when(F.col("violation").isNotNull(), 1).otherwise(0)).alias(
-                "n_violations"
-            ),
-        )
-    )

@@ -3,13 +3,14 @@ G1-G4/G7-G8 + F3-F9 of SURVEY §2, reference map2db.py:454-728 +
 815-1077 geometry prep).
 
 Execution model: ``decode_features`` runs ``mapInPandas`` over the
-tile manifest.  Each task opens the map file once, range-reads each
-tile's [offset, end_offset) byte slice, decodes it with the pure
-Python parsers below, applies the geometry kernel (clip to tile box
-with covers short-circuit, grid snap, emptiness/type filters,
-normalization), and emits one row per surviving feature with geometry
-already encoded as WKB.  Nothing but Arrow batches crosses the
-JVM<->Python boundary; no driver-side loops.
+tile manifest.  Each task opens the map file once and runs
+``decode_tiles``, the tile-read loop the MapsForge connectors share:
+it range-reads each tile's [offset, end_offset) byte slice, decodes
+it with the pure Python parsers below, applies the geometry kernel
+(clip to tile box with covers short-circuit, grid snap,
+emptiness/type filters, normalization), and emits one row per
+surviving feature with geometry already encoded as WKB.  Nothing but
+Arrow batches crosses the JVM<->Python boundary; no driver-side loops.
 
 Scale notes: parallelism == manifest partitioning (repartition by an
 interleaved tile key upstream to break spatial skew); the file is
@@ -360,38 +361,37 @@ _COLS = [
 ]
 
 
-def decode_features(spark, path: str, header: MapHeader, manifest=None):
+def decode_tiles(f, header: MapHeader, tiles) -> Iterator[tuple]:
+    """The tile-read loop every decode path shares (the mapInPandas
+    kernel below and both MapsForge connectors): for each manifest row
+    of ``tiles`` skip an empty tile (F3, no byte read), range-read the
+    tile's bytes from the open map file ``f`` and yield its feature
+    rows."""
+    for t in tiles:
+        if t.offset == t.end_offset:
+            continue
+        sf = header.subfiles[t.subfile_idx]
+        f.seek(t.offset)
+        yield from tile_feature_rows(
+            f.read(t.end_offset - t.offset), int(t.level), sf.minzoom, sf.maxzoom,
+            int(t.tile_x), int(t.tile_y),
+            header.ptags, header.wtags, header.debuginfo, header.is_dbl,
+        )
+
+
+def decode_features(spark, path: str, header: MapHeader, manifest):
     """manifest -> features DataFrame via mapInPandas."""
-    from map2db_spark.sources.header import build_manifest, nonempty
-
-    if manifest is None:
-        manifest = build_manifest(spark, path, header)
-    manifest = nonempty(manifest)
-
-    # broadcast the tag dictionaries (P3): a planet-scale map carries
-    # thousands of tag strings, and a closure would re-serialize them
-    # into every task; a broadcast ships them once per executor
-    tags_bc = spark.sparkContext.broadcast((header.ptags, header.wtags))
-    debuginfo = header.debuginfo
-    dbl = header.is_dbl
-    zooms = [(sf.minzoom, sf.maxzoom) for sf in header.subfiles]
+    # broadcast the header (its tag dictionaries, P3): a planet-scale
+    # map carries thousands of tag strings, and a closure would
+    # re-serialize them into every task; a broadcast ships them once
+    # per executor
+    header_bc = spark.sparkContext.broadcast(header)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ptags, wtags = tags_bc.value
+        hdr = header_bc.value
         with open(path, "rb") as f:
             for pdf in batches:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    f.seek(r.offset)
-                    buf = f.read(r.end_offset - r.offset)
-                    minzoom, maxzoom = zooms[r.subfile_idx]
-                    rows.extend(
-                        tile_feature_rows(
-                            buf, int(r.level), minzoom, maxzoom,
-                            int(r.tile_x), int(r.tile_y),
-                            ptags, wtags, debuginfo, dbl,
-                        )
-                    )
+                rows = list(decode_tiles(f, hdr, pdf.itertuples(index=False)))
                 yield pd.DataFrame(rows, columns=_COLS)
 
     return manifest.mapInPandas(kernel, schema=FEATURE_SCHEMA)

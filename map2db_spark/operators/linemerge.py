@@ -2,10 +2,10 @@
 
 The reference loops ``SELECT ... WHERE m2db_lnum = ?`` over the whole
 id range on one thread.  Here the same per-feature algorithm
-(geometry/linemerge.py) runs inside ``applyInPandas`` — but only for
-features that need it: a cheap vectorized part-count probe on the WKB
-header filters single-part lines out *before* the shuffle, so at
-scale the merge stage moves only the multi-part minority.
+(geometry/linemerge.py) runs inside a shuffle-free ``mapInPandas`` —
+but only for features that need it: a part-count probe on the WKB
+header (a pure column expression) splits off the single-part lines, so
+at scale the merge kernel sees only the multi-part minority.
 """
 
 from __future__ import annotations

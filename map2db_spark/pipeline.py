@@ -5,10 +5,10 @@ Spark-first restatement of the reference's ``map2db(src, dst)``
 
 driver:    header + tile index parse (KB-scale)            [sources/header]
 executors: manifest -> mapInPandas decode + geometry prep  [operators/decode]
-           groupBy(ftype, fid) consolidation (dbl)         [operators/consolidate]
-           groupBy(fid) line merge (dbl)                   [operators/linemerge]
-driver:    SQLite + TOML export sinks                      [sinks/]
-executors: parquet canonical sink (optional)               [sinks/parquet_sink]
+           (ftype, fid) shuffle + consolidation (dbl)      [operators/consolidate]
+           shuffle-free mapInPandas line merge (dbl)       [operators/linemerge]
+executors: parquet sink (the default)                      [sinks/parquet_sink]
+driver:    SQLite export sink + TOML config                [sinks/]
 
 The plan is lazy end to end; the only driver-side data movements are
 the collected vtag key set (tiny) and the Arrow batches streamed into
@@ -24,6 +24,7 @@ from map2db_spark.operators.consolidate import assign_ids, consolidate
 from map2db_spark.operators.decode import decode_features
 from map2db_spark.operators.linemerge import merge_lines
 from map2db_spark.sinks.sqlite_sink import (
+    TABLE_FOR_FTYPE,
     readme_license,
     vtag_key_order,
     write_sqlite,
@@ -59,23 +60,10 @@ def load_features(spark: SparkSession, src: str, header: MapHeader | None = None
     return decode_features(spark, src, header, manifest)
 
 
-def decode_rejects(feats: DataFrame) -> DataFrame:
-    """Features the decoder could not repair to valid geometry (F7/G4
-    rejects path): the reference discards these with a log line
-    (map2db.py:996-1011); here they stay queryable, with the reason
-    under vtags['m2db:reject']."""
-    return feats.where(F.col("ftype") == "reject")
-
-
-def consolidated_features(
-    spark: SparkSession, src: str, header: MapHeader | None = None
-) -> DataFrame:
-    """map file -> final feature rows (dbl: consolidated + line-merged;
-    non-dbl: deterministically numbered raw rows).  Unreparable
-    geometries (ftype='reject') are excluded, as the reference
-    discards them; audit them via decode_rejects(load_features(...))."""
-    header = header or read_header(src)
-    feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
+def _final_features(feats: DataFrame, header: MapHeader) -> DataFrame:
+    """Reject-free decoded features -> final feature rows (dbl:
+    consolidated + line-merged; non-dbl: deterministically numbered
+    raw rows)."""
     if not header.is_dbl:
         return assign_ids(feats).select(
             "ftype", "fid", "level", "minz", "maxz", "layer", "tags", "vtags", "geom",
@@ -90,6 +78,18 @@ def consolidated_features(
         "was_multi", "still_multi_after_merge", "still_multi_after_snap", "has_loop"
     )
     return cons.where(F.col("ftype") != "line").unionByName(merged)
+
+
+def consolidated_features(
+    spark: SparkSession, src: str, header: MapHeader | None = None
+) -> DataFrame:
+    """map file -> final feature rows.  Unreparable geometries
+    (ftype='reject', F7/G4) are excluded, as the reference discards
+    them (map2db.py:996-1011); they stay queryable in
+    load_features(...), with the reason under vtags['m2db:reject']."""
+    header = header or read_header(src)
+    feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
+    return _final_features(feats, header)
 
 
 def map2db(
@@ -129,31 +129,13 @@ def map2db(
     # export scale this is the working set, materialized once
     feats.persist()
     try:
-        if header.is_dbl:
-            # one consolidate execution; the line/non-line branches and
-            # the export all read the checkpoint
-            cons = consolidate(feats, header).localCheckpoint()
-            lines = cons.where(F.col("ftype") == "line")
-            merged = merge_lines(lines).drop(
-                "was_multi", "still_multi_after_merge",
-                "still_multi_after_snap", "has_loop",
-            )
-            final = cons.where(F.col("ftype") != "line").unionByName(merged)
-        else:
-            final = assign_ids(feats).select(
-                "ftype", "fid", "level", "minz", "maxz", "layer", "tags", "vtags",
-                "geom", F.lit(None).cast("string").alias("violation"),
-            )
+        final = _final_features(feats, header)
         if sink == "sqlite":
             result = write_sqlite(
                 out_pathname, src_pathname, header, final, feats
             )
         else:
-            from map2db_spark.sinks.parquet_sink import (
-                TABLE_FOR_FTYPE,
-                write_manifest,
-                write_parquet,
-            )
+            from map2db_spark.sinks.parquet_sink import write_manifest, write_parquet
 
             vtag_cols = vtag_key_order(feats)
             # avoid re-running the merge branch once per table: the

@@ -22,16 +22,23 @@ from pyspark.sql import functions as F
 
 from map2db_spark.registry import query
 
-_FIXTURE = str(Path(__file__).resolve().parent.parent / "fixtures" / "dbl.map")
+_FIXTURES = Path(__file__).resolve().parent.parent / "fixtures"
 
 
-def _fixture_path() -> str:
-    if not os.path.exists(_FIXTURE):
-        from map2db_spark.sources.sample_maps import dbl_map
+def _fixture_map(name: str) -> str:
+    """Path of fixture map ``name`` ("dbl", "nondbl", "invalid": committed
+    under fixtures/; "large": generated under /tmp), written from
+    sources.sample_maps.<name>_map() first if it is missing."""
+    path = (
+        "/tmp/m2db_spark_large.map" if name == "large"
+        else str(_FIXTURES / f"{name}.map")
+    )
+    if not os.path.exists(path):
+        from map2db_spark.sources import sample_maps
 
-        os.makedirs(os.path.dirname(_FIXTURE), exist_ok=True)
-        dbl_map().write(_FIXTURE)
-    return _FIXTURE
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        getattr(sample_maps, f"{name}_map")().write(path)
+    return path
 
 
 _CONSOLIDATED_CACHE: dict = {}
@@ -44,10 +51,10 @@ def _consolidated(spark: SparkSession):
     not once per query."""
     from map2db_spark.pipeline import consolidated_features
 
-    key = (spark.sparkContext.applicationId, _fixture_path())
+    key = (spark.sparkContext.applicationId, _fixture_map("dbl"))
     df = _CONSOLIDATED_CACHE.get(key)
     if df is None:
-        df = consolidated_features(spark, _fixture_path()).persist()
+        df = consolidated_features(spark, _fixture_map("dbl")).persist()
         df.count()  # materialize eagerly
         _CONSOLIDATED_CACHE[key] = df
     return df
@@ -71,7 +78,7 @@ def m2db_decode_sightings(spark: SparkSession, sf_dir: str) -> DataFrame:
     L4), 4 area (A1; A2 in two tiles + one lower level)."""
     from map2db_spark.pipeline import load_features
 
-    feats = load_features(spark, _fixture_path())
+    feats = load_features(spark, _fixture_map("dbl"))
     return (
         feats.groupBy("ftype")
         .agg(
@@ -123,7 +130,7 @@ def m2db_merge_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map2db_spark.pipeline import load_features
     from map2db_spark.sources.header import read_header
 
-    path = _fixture_path()
+    path = _fixture_map("dbl")
     header = read_header(path)
     feats = load_features(spark, path, header)
     lines = consolidate(feats, header).where(F.col("ftype") == "line")
@@ -199,17 +206,6 @@ def m2db_geometry_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LARGE_FIXTURE = "/tmp/m2db_spark_large.map"
-
-
-def _large_fixture_path() -> str:
-    if not os.path.exists(_LARGE_FIXTURE):
-        from map2db_spark.sources.sample_maps import large_map
-
-        large_map().write(_LARGE_FIXTURE)
-    return _LARGE_FIXTURE
-
-
 @query(
     "m2db_pipeline_throughput",
     oracle="""
@@ -230,7 +226,7 @@ def m2db_pipeline_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     workload is value-checked."""
     from map2db_spark.pipeline import consolidated_features
 
-    final = consolidated_features(spark, _large_fixture_path())
+    final = consolidated_features(spark, _fixture_map("large"))
     return final.groupBy("ftype").agg(
         F.count(F.lit(1)).alias("n_features"),
         F.min("fid").alias("min_fid"),
@@ -332,20 +328,6 @@ def m2db_validation_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INVALID_FIXTURE = str(
-    Path(__file__).resolve().parent.parent / "fixtures" / "invalid.map"
-)
-
-
-def _invalid_fixture_path() -> str:
-    if not os.path.exists(_INVALID_FIXTURE):
-        from map2db_spark.sources.sample_maps import invalid_map
-
-        os.makedirs(os.path.dirname(_INVALID_FIXTURE), exist_ok=True)
-        invalid_map().write(_INVALID_FIXTURE)
-    return _INVALID_FIXTURE
-
-
 @query(
     "m2db_repair_salvage",
     oracle="""
@@ -385,7 +367,7 @@ def m2db_repair_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda b: sum(len(rings) for rings in gwkb.decode(b)[1]) if b else 0
         )
 
-    feats = load_features(spark, _invalid_fixture_path())
+    feats = load_features(spark, _fixture_map("invalid"))
     return feats.select(
         "ftype",
         "fid",
@@ -550,7 +532,7 @@ def m2db_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package(spark)
     sds.register(spark)
-    feats = spark.read.format("mapsforge").load(_fixture_path())
+    feats = spark.read.format("mapsforge").load(_fixture_map("dbl"))
     return feats.groupBy("ftype").agg(
         F.count(F.lit(1)).alias("n_sightings"),
         F.countDistinct("fid").alias("n_features"),
@@ -581,11 +563,11 @@ def m2db_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package(spark)
     sds.register(spark)
-    feats = spark.read.format("mapsforge").load(_fixture_path())
+    feats = spark.read.format("mapsforge").load(_fixture_map("dbl"))
     n_all = feats.agg(F.count(F.lit(1)).cast("long").alias("n_all"))
     n_pts = (
         spark.read.format("mapsforge")
-        .load(_fixture_path())
+        .load(_fixture_map("dbl"))
         .where((F.col("level") == 8) & (F.col("ftype") == "point"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_points_l8"))
     )
@@ -627,27 +609,13 @@ def m2db_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sds.register(spark)
     stream = (
         spark.readStream.format("mapsforge_stream")
-        .option("plan", sds.stream_plan_json(_fixture_path()))
-        .load(_fixture_path())
+        .option("plan", sds.stream_plan_json(_fixture_map("dbl")))
+        .load(_fixture_map("dbl"))
     )
     agg = stream.groupBy("ftype").agg(
         F.count(F.lit(1)).cast("long").alias("n_sightings")
     )
     return run_available_now_df(agg, "complete").select("ftype", "n_sightings")
-
-
-_NONDBL_FIXTURE = str(
-    Path(__file__).resolve().parent.parent / "fixtures" / "nondbl.map"
-)
-
-
-def _nondbl_fixture_path() -> str:
-    if not os.path.exists(_NONDBL_FIXTURE):
-        from map2db_spark.sources.sample_maps import nondbl_map
-
-        os.makedirs(os.path.dirname(_NONDBL_FIXTURE), exist_ok=True)
-        nondbl_map().write(_NONDBL_FIXTURE)
-    return _NONDBL_FIXTURE
 
 
 @query(
@@ -679,7 +647,7 @@ def m2db_multi_map_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     sds.register(spark)
     feats = (
         spark.read.format("mapsforge")
-        .option("paths", f"{_fixture_path()},{_nondbl_fixture_path()}")
+        .option("paths", _fixture_map("dbl") + "," + _fixture_map("nondbl"))
         .load()
     )
     return (

@@ -22,7 +22,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-TABLE_FOR_FTYPE = {"point": "points", "line": "lines", "area": "areas"}
+from map2db_spark.sinks.sqlite_sink import TABLE_FOR_FTYPE, provenance
 
 
 def write_parquet(consolidated: DataFrame, out_dir: str) -> dict[str, str]:
@@ -47,61 +47,11 @@ def write_manifest(
     header,
     vtag_cols: dict[str, list[str]],
 ) -> str:
-    """Provenance sidecar mirroring sqlite_sink.write_metadata
-    (map2db.py:1398-1467): README texts, bbox limits, subfile zoom
-    ranges, and the reference-order vtag key list per table."""
-    from map2db_spark.sinks.sqlite_sink import readme_license
-
-    desc, text = readme_license(header, src_pathname)
-    readme = [
-        {"desc": desc, "text": text},
-        {
-            "desc": "Text generated by map2db_spark",
-            "text": (
-                f"(This dataset was recreated from {src_pathname} by"
-                f" map2db_spark, a PySpark-native reimplementation of"
-                f" the map2db extraction semantics.)"
-            ),
-        },
-    ]
-    if header.comment:
-        readme.append(
-            {
-                "desc": (
-                    "Text from the 'comment' field in the file header of"
-                    " the map file from which this dataset was recreated."
-                    " This often includes a copyright and/or license"
-                    " statement for the map file (not for this dataset!)."
-                ),
-                "text": header.comment,
-            }
-        )
-    if header.createdby:
-        readme.append(
-            {
-                "desc": (
-                    "Text from the 'created by' field in the file header"
-                    " of the map file from which this dataset was"
-                    " recreated."
-                ),
-                "text": header.createdby,
-            }
-        )
+    """Provenance sidecar: the SQLite sink's README texts, bbox limits
+    and subfile zoom ranges (sqlite_sink.provenance), plus the
+    reference-order vtag key list per table."""
     manifest = {
-        "readme": readme,
-        "limits": {
-            k: getattr(header, k)
-            for k in ["minlat", "minlon", "maxlat", "maxlon"]
-        },
-        "subfiles": [
-            {
-                "subfile_num": i,
-                "level": sf.level,
-                "minzoom": sf.minzoom,
-                "maxzoom": sf.maxzoom,
-            }
-            for i, sf in enumerate(header.subfiles)
-        ],
+        **provenance(header, src_pathname, "dataset"),
         "vtag_cols": vtag_cols,
         "tables": list(TABLE_FOR_FTYPE.values()),
     }

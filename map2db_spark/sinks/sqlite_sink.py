@@ -146,7 +146,6 @@ def write_features(
     dbc: sqlite3.Connection,
     consolidated: DataFrame,
     vtag_cols: dict[str, list[str]],
-    batch_rows: int = 10_000,
 ) -> dict[str, int]:
     """Stream the consolidated features into the three tables in ONE
     pass with driver-side dispatch onto per-table prepared INSERTs.
@@ -244,7 +243,7 @@ def write_features(
             for path in sorted(glob.glob(f"{tmpd}/ftype={ftype}/part-*")):
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(
-                    batch_size=batch_rows, columns=read_cols
+                    batch_size=10_000, columns=read_cols
                 ):
                     idx = {n: i for i, n in enumerate(rb.schema.names)}
                     lists = [rb.column(idx[n]).to_pylist() for n in read_cols]
@@ -282,53 +281,82 @@ def readme_license(header, src_pathname: str) -> tuple[str, str]:
     )
 
 
-def write_metadata(dbc: sqlite3.Connection, header, src_pathname: str) -> str:
-    """README / limits / subfiles rows (map2db.py:1398-1467).  Returns
-    the license (or explanatory) text that was recorded."""
+def provenance(header, src_pathname: str, noun: str) -> dict:
+    """The output's README rows, bbox limits and subfile zoom ranges
+    (map2db.py:1398-1467), built once for both sinks: the SQLite sink
+    inserts them into its README/limits/subfiles tables, the parquet
+    sink records them in manifest.json.  ``noun`` names the output
+    ("database" or "dataset") in the generated texts."""
     desc, text = readme_license(header, src_pathname)
-    dbc.execute("INSERT INTO README (desc, text) VALUES (?, ?);", (desc, text))
-    dbc.execute(
-        "INSERT INTO README (desc, text) VALUES (?, ?);",
-        (
-            "Text generated by map2db_spark",
-            f"(This database was recreated from {src_pathname} by"
-            f" map2db_spark, a PySpark-native reimplementation of the"
-            f" map2db extraction semantics.)",
-        ),
-    )
-    if header.comment:
-        dbc.execute(
-            "INSERT INTO README (desc, text) VALUES (?, ?);",
-            (
-                "Text from the 'comment' field in the file header of the"
-                " map file from which this database was recreated. This"
-                " often includes a copyright and/or license statement for"
-                " the map file (not for this database!).",
-                header.comment,
+    readme = [
+        {"desc": desc, "text": text},
+        {
+            "desc": "Text generated by map2db_spark",
+            "text": (
+                f"(This {noun} was recreated from {src_pathname} by"
+                f" map2db_spark, a PySpark-native reimplementation of"
+                f" the map2db extraction semantics.)"
             ),
+        },
+    ]
+    if header.comment:
+        readme.append(
+            {
+                "desc": (
+                    "Text from the 'comment' field in the file header of"
+                    f" the map file from which this {noun} was recreated."
+                    " This often includes a copyright and/or license"
+                    f" statement for the map file (not for this {noun}!)."
+                ),
+                "text": header.comment,
+            }
         )
     if header.createdby:
-        dbc.execute(
-            "INSERT INTO README (desc, text) VALUES (?, ?);",
-            (
-                "Text from the 'created by' field in the file header of"
-                " the map file from which this database was recreated.",
-                header.createdby,
-            ),
+        readme.append(
+            {
+                "desc": (
+                    "Text from the 'created by' field in the file header"
+                    f" of the map file from which this {noun} was"
+                    " recreated."
+                ),
+                "text": header.createdby,
+            }
         )
-    for key in ["minlat", "minlon", "maxlat", "maxlon"]:
-        dbc.execute(
-            "INSERT INTO limits (key, value) VALUES (?, ?);",
-            (key, getattr(header, key)),
-        )
-    for i, sf in enumerate(header.subfiles):
-        dbc.execute(
-            "INSERT INTO subfiles (subfile_num, level, minzoom, maxzoom)"
-            " VALUES (?, ?, ?, ?);",
-            (i, sf.level, sf.minzoom, sf.maxzoom),
-        )
+    return {
+        "readme": readme,
+        "limits": {
+            k: getattr(header, k)
+            for k in ["minlat", "minlon", "maxlat", "maxlon"]
+        },
+        "subfiles": [
+            {
+                "subfile_num": i,
+                "level": sf.level,
+                "minzoom": sf.minzoom,
+                "maxzoom": sf.maxzoom,
+            }
+            for i, sf in enumerate(header.subfiles)
+        ],
+    }
+
+
+def write_metadata(dbc: sqlite3.Connection, header, src_pathname: str) -> str:
+    """README / limits / subfiles rows.  Returns the license (or
+    explanatory) text that was recorded."""
+    prov = provenance(header, src_pathname, "database")
+    dbc.executemany(
+        "INSERT INTO README (desc, text) VALUES (:desc, :text);", prov["readme"]
+    )
+    dbc.executemany(
+        "INSERT INTO limits (key, value) VALUES (?, ?);", prov["limits"].items()
+    )
+    dbc.executemany(
+        "INSERT INTO subfiles (subfile_num, level, minzoom, maxzoom)"
+        " VALUES (:subfile_num, :level, :minzoom, :maxzoom);",
+        prov["subfiles"],
+    )
     dbc.commit()
-    return text
+    return prov["readme"][0]["text"]
 
 
 def finalize(dbc: sqlite3.Connection) -> None:

@@ -215,6 +215,18 @@ MANIFEST_SCHEMA = (
     "tile_x INT, tile_y INT, offset LONG, end_offset LONG"
 )
 
+CHUNK_ENTRIES = 65536  # tile-index entries per distributed read task
+
+
+def tile_chunks(header: MapHeader, chunk_entries: int) -> list[tuple[int, int, int]]:
+    """The tile-index split: ``(subfile_idx, start, count)`` slices of
+    at most ``chunk_entries`` entries, in subfile then index order."""
+    return [
+        (i, start, min(chunk_entries, sf.tile_count - start))
+        for i, sf in enumerate(header.subfiles)
+        for start in range(0, sf.tile_count, chunk_entries)
+    ]
+
 
 def build_manifest(
     spark,
@@ -222,7 +234,7 @@ def build_manifest(
     header: MapHeader,
     *,
     distributed: bool | None = None,
-    chunk_entries: int = 65536,
+    chunk_entries: int = CHUNK_ENTRIES,
 ):
     """Tile manifest DataFrame for every tile of every subfile.
 
@@ -242,10 +254,7 @@ def build_manifest(
         return spark.createDataFrame(pdf, schema=MANIFEST_SCHEMA)
 
     # chunk specs: one row per index slice; executors range-read the index
-    specs = []
-    for i, sf in enumerate(header.subfiles):
-        for start in range(0, sf.tile_count, chunk_entries):
-            specs.append((i, start, min(chunk_entries, sf.tile_count - start)))
+    specs = tile_chunks(header, chunk_entries)
     spec_df = spark.createDataFrame(
         pd.DataFrame(specs, columns=["subfile_idx", "start", "count"]),
         schema="subfile_idx INT, start LONG, count LONG",

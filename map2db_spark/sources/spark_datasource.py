@@ -26,9 +26,10 @@ Filter pushdown (DataSourceReader.pushFilters):
 Everything else is reported back as unsupported, so Spark re-applies
 it — pushdown here is an optimization, never a semantics change.
 
-Reference parity: the decode kernel is the same tile_feature_rows the
-pipeline uses (map2db.py:815-1077 semantics), so the connector's
-output is row-identical to pipeline.load_features.
+Reference parity: both readers decode through the pipeline's own
+tile-read loop (operators/decode.decode_tiles, map2db.py:815-1077
+semantics), so the connector's output is row-identical to
+pipeline.load_features.
 """
 
 from __future__ import annotations
@@ -45,7 +46,23 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from map2db_spark.operators.decode import FEATURE_SCHEMA
+from map2db_spark.operators.decode import FEATURE_SCHEMA, decode_tiles
+from map2db_spark.sources.header import (
+    CHUNK_ENTRIES,
+    _manifest_chunk_rows,
+    read_header,
+    tile_chunks,
+)
+
+
+def _decode_chunk(path: str, header, sf_idx: int, start: int, count: int):
+    """Feature rows of one tile-index chunk (executor side): range-read
+    the chunk's index slice, then its tiles through the shared loop."""
+    tiles = _manifest_chunk_rows(
+        path, sf_idx, header.subfiles[sf_idx], header.debuginfo, start, count
+    )
+    with open(path, "rb") as f:
+        yield from decode_tiles(f, header, tiles.itertuples(index=False))
 
 
 class TileChunk(InputPartition):
@@ -67,8 +84,6 @@ class MapsforgeReader(DataSourceReader):
     partitions, so parallelism is sum-of-files, not per-file)."""
 
     def __init__(self, options):
-        from map2db_spark.sources.header import read_header
-
         multi = options.get("paths")
         if multi:
             self.paths = [p for p in multi.split(",") if p]
@@ -83,7 +98,6 @@ class MapsforgeReader(DataSourceReader):
         # driver-side planning state: header metadata only (KB-scale
         # per file, picklable — ships to executors inside the reader)
         self.headers = [read_header(p) for p in self.paths]
-        self.chunk_entries = int(options.get("chunk_entries", 65536))
         self.level_filter: set[int] | None = None
         self.ftype_filter: set[str] | None = None
 
@@ -103,22 +117,14 @@ class MapsforgeReader(DataSourceReader):
                 yield f  # unsupported -> Spark re-applies it
 
     def partitions(self):
-        out = []
-        for pi, header in enumerate(self.headers):
-            for i, sf in enumerate(header.subfiles):
-                if (
-                    self.level_filter is not None
-                    and sf.level not in self.level_filter
-                ):
-                    continue  # subfile pruned: its bytes are never read
-                for start in range(0, sf.tile_count, self.chunk_entries):
-                    out.append(
-                        TileChunk(
-                            i, start,
-                            min(self.chunk_entries, sf.tile_count - start),
-                            path_idx=pi,
-                        )
-                    )
+        # a pruned subfile gets no partition: its bytes are never read
+        out = [
+            TileChunk(i, start, count, path_idx=pi)
+            for pi, header in enumerate(self.headers)
+            for i, start, count in tile_chunks(header, CHUNK_ENTRIES)
+            if self.level_filter is None
+            or header.subfiles[i].level in self.level_filter
+        ]
         if not out:
             # Spark requires >= 1 partition; an empty one yields no rows
             out.append(TileChunk(-1, 0, 0))
@@ -127,30 +133,14 @@ class MapsforgeReader(DataSourceReader):
     def read(self, partition: TileChunk):
         if partition.subfile_idx < 0:
             return
-        from map2db_spark.operators.decode import tile_feature_rows
-        from map2db_spark.sources.header import _manifest_chunk_rows
-
-        path = self.paths[partition.path_idx]
-        hdr = self.headers[partition.path_idx]
-        sf = hdr.subfiles[partition.subfile_idx]
-        manifest = _manifest_chunk_rows(
-            path, partition.subfile_idx, sf, hdr.debuginfo,
-            partition.start, partition.count,
-        )
         keep = self.ftype_filter
-        with open(path, "rb") as f:
-            for r in manifest.itertuples(index=False):
-                if r.offset == r.end_offset:
-                    continue  # F3: empty tile, no byte read
-                f.seek(r.offset)
-                buf = f.read(r.end_offset - r.offset)
-                for row in tile_feature_rows(
-                    buf, int(r.level), sf.minzoom, sf.maxzoom,
-                    int(r.tile_x), int(r.tile_y),
-                    hdr.ptags, hdr.wtags, hdr.debuginfo, hdr.is_dbl,
-                ):
-                    if keep is None or row[0] in keep:
-                        yield row
+        for row in _decode_chunk(
+            self.paths[partition.path_idx],
+            self.headers[partition.path_idx],
+            partition.subfile_idx, partition.start, partition.count,
+        ):
+            if keep is None or row[0] in keep:
+                yield row
 
 
 class MapsforgeDataSource(DataSource):
@@ -233,28 +223,12 @@ def _stream_source_class():
                 return
             # executor-side: the package zip shipped via addPyFile;
             # the KB-scale header re-parses per task
-            from map2db_spark.operators.decode import tile_feature_rows
-            from map2db_spark.sources.header import (
-                _manifest_chunk_rows,
-                read_header,
-            )
+            from map2db_spark.sources.header import read_header
+            from map2db_spark.sources.spark_datasource import _decode_chunk
 
-            hdr = read_header(self.path)
-            sf = hdr.subfiles[sf_idx]
-            manifest = _manifest_chunk_rows(
-                self.path, sf_idx, sf, hdr.debuginfo, start, count
+            yield from _decode_chunk(
+                self.path, read_header(self.path), sf_idx, start, count
             )
-            with open(self.path, "rb") as f:
-                for r in manifest.itertuples(index=False):
-                    if r.offset == r.end_offset:
-                        continue
-                    f.seek(r.offset)
-                    buf = f.read(r.end_offset - r.offset)
-                    yield from tile_feature_rows(
-                        buf, int(r.level), sf.minzoom, sf.maxzoom,
-                        int(r.tile_x), int(r.tile_y),
-                        hdr.ptags, hdr.wtags, hdr.debuginfo, hdr.is_dbl,
-                    )
 
     class _Source(_DS):
         @classmethod
@@ -270,20 +244,14 @@ def _stream_source_class():
     return _Source
 
 
-def stream_plan_json(path: str, chunk_entries: int = 4096) -> str:
+def stream_plan_json(path: str) -> str:
     """Driver-side planning for the streaming source: tile-index chunk
-    specs as JSON, passed via .option('plan', ...) so the package-free
-    runner never needs to parse the header itself."""
+    specs (4096 entries each, so a micro-batch admits small slices) as
+    JSON, passed via .option('plan', ...) so the package-free runner
+    never needs to parse the header itself."""
     import json
 
-    from map2db_spark.sources.header import read_header
-
-    header = read_header(path)
-    chunks = []
-    for i, sf in enumerate(header.subfiles):
-        for start in range(0, sf.tile_count, chunk_entries):
-            chunks.append((i, start, min(chunk_entries, sf.tile_count - start)))
-    return json.dumps({"chunks": chunks})
+    return json.dumps({"chunks": tile_chunks(read_header(path), 4096)})
 
 
 def register(spark) -> None:

@@ -154,10 +154,10 @@ def test_sqlite_sink_large(spark, tmp_path):
     collect(): counts and PK integrity verified."""
     import sqlite3
 
-    from map2db_spark.queries_mapsforge import _large_fixture_path
+    from map2db_spark.queries_mapsforge import _fixture_map
 
     out = str(tmp_path / "large.db")
-    result = map2db(spark, _large_fixture_path(), out, sink="sqlite")
+    result = map2db(spark, _fixture_map("large"), out, sink="sqlite")
     assert result["counts"] == {"points": 5120, "lines": 1280, "areas": 1280}
     con = sqlite3.connect(out)
     try:

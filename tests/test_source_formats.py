@@ -117,19 +117,32 @@ def test_corrupt_json_records_are_quarantined(spark, tmp_path):
 
 
 def test_mapsforge_datasource_rows_identical_to_pipeline(spark):
-    """The connector path (spark.read.format('mapsforge')) must be
-    row-identical to pipeline.load_features — same kernel, different
-    packaging."""
+    """Both connector paths — the batch source
+    (spark.read.format('mapsforge')) and the streaming source
+    (mapsforge_stream, drained to completion as m2db_stream_ingest
+    does) — must be row-identical to pipeline.load_features on a dbl
+    and a non-dbl map: same tile-read loop, different packaging."""
     from map2db_spark.pipeline import load_features
-    from map2db_spark.queries_mapsforge import _fixture_path
+    from map2db_spark.queries_mapsforge import _fixture_map
+    from map2db_spark.session import ship_package
     from map2db_spark.sources import spark_datasource as sds
+    from map2db_spark.streaming.events import run_available_now_df
 
+    ship_package(spark)
     sds.register(spark)
-    via_ds = spark.read.format("mapsforge").load(_fixture_path())
-    via_pipe = load_features(spark, _fixture_path())
-    a = sorted(map(str, via_ds.collect()))
-    b = sorted(map(str, via_pipe.collect()))
-    assert a == b and len(a) > 0
+    for name in ["dbl", "nondbl"]:
+        path = _fixture_map(name)
+        via_pipe = sorted(map(str, load_features(spark, path).collect()))
+        via_batch = spark.read.format("mapsforge").load(path)
+        stream = (
+            spark.readStream.format("mapsforge_stream")
+            .option("plan", sds.stream_plan_json(path))
+            .load(path)
+        )
+        via_stream = run_available_now_df(stream, "append")
+        assert len(via_pipe) > 0, name
+        for source, df in [("batch", via_batch), ("stream", via_stream)]:
+            assert sorted(map(str, df.collect())) == via_pipe, (name, source)
 
 
 def test_mapsforge_datasource_level_filter_prunes_partitions():
@@ -137,10 +150,10 @@ def test_mapsforge_datasource_level_filter_prunes_partitions():
     at PLANNING time — their index and tile bytes are never read."""
     from pyspark.sql.datasource import EqualTo
 
-    from map2db_spark.queries_mapsforge import _fixture_path
+    from map2db_spark.queries_mapsforge import _fixture_map
     from map2db_spark.sources.spark_datasource import MapsforgeReader
 
-    r = MapsforgeReader({"path": _fixture_path()})
+    r = MapsforgeReader({"path": _fixture_map("dbl")})
     levels = [sf.level for sf in r.headers[0].subfiles]
     assert len(set(levels)) > 1, "fixture must have multiple zoom levels"
     all_parts = r.partitions()
@@ -155,10 +168,10 @@ def test_mapsforge_datasource_level_filter_prunes_partitions():
 def test_mapsforge_datasource_unsupported_filters_handed_back():
     from pyspark.sql.datasource import EqualTo, GreaterThan
 
-    from map2db_spark.queries_mapsforge import _fixture_path
+    from map2db_spark.queries_mapsforge import _fixture_map
     from map2db_spark.sources.spark_datasource import MapsforgeReader
 
-    r = MapsforgeReader({"path": _fixture_path()})
+    r = MapsforgeReader({"path": _fixture_map("dbl")})
     unsupported = list(
         r.pushFilters([GreaterThan(("layer",), 2), EqualTo(("ftype",), "line")])
     )
@@ -170,17 +183,14 @@ def test_mapsforge_datasource_unsupported_filters_handed_back():
 def test_mapsforge_datasource_multi_path_partitions():
     """Multi-file scans plan one partition set per file: tile chunks
     carry their path index, and counts sum across files."""
-    from map2db_spark.queries_mapsforge import (
-        _fixture_path,
-        _nondbl_fixture_path,
-    )
+    from map2db_spark.queries_mapsforge import _fixture_map
     from map2db_spark.sources.spark_datasource import MapsforgeReader
 
-    single = MapsforgeReader({"path": _fixture_path()})
+    single = MapsforgeReader({"path": _fixture_map("dbl")})
     multi = MapsforgeReader(
-        {"paths": f"{_fixture_path()},{_nondbl_fixture_path()}"}
+        {"paths": _fixture_map("dbl") + "," + _fixture_map("nondbl")}
     )
-    nd = MapsforgeReader({"path": _nondbl_fixture_path()})
+    nd = MapsforgeReader({"path": _fixture_map("nondbl")})
     p_single = single.partitions()
     p_multi = multi.partitions()
     p_nd = nd.partitions()
