@@ -7,10 +7,11 @@ keyed consolidation -> FDO RFC 16 SQLite geodatabase.  This package
 re-expresses those semantics as a lazy Catalyst plan:
 
     tile manifest DataFrame  (driver parses the KB-scale header/index)
-      -> mapInPandas decode kernel        (operators/decode.py)
-      -> vectorized geometry kernel       (geometry/)
-      -> groupBy(ftype, fid) consolidation (operators/consolidate.py)
-      -> groupBy(fid) line merge          (operators/linemerge.py)
+      -> mapInPandas decode kernel, clip + repair inside it
+                                          (operators/decode.py, geometry/)
+      -> (ftype, fid) repartition + mapInPandas consolidation and
+         fragment union                   (operators/consolidate.py)
+      -> shuffle-free mapInPandas line merge (operators/linemerge.py)
       -> sinks: parquet (canonical), SQLite + TOML (compat exports)
 
 Beyond reference parity, `functions/` adds the large-scale

@@ -79,11 +79,11 @@ from pyspark.sql.types import BooleanType
 @pandas_udf(BooleanType())
 def point_covered_by(geom: pd.Series, poly_wkb: pd.Series) -> pd.Series:
     """Exact covers(polygon, point) for point features: integer-grid
-    ray cast (boundary counts as covered), reusing the dissolve
+    ray cast (boundary counts as covered), reusing the geometry
     kernel's exact predicates.  poly_wkb is typically a broadcast
     literal (F.lit(bytes)).  Sedona equivalent: ST_Covers."""
     from map2db_spark.geometry import wkb as gwkb
-    from map2db_spark.geometry.union import _point_in_ring, _to_int
+    from map2db_spark.geometry.exact import point_in_ring, to_grid
 
     def covered(point_buf, poly_buf) -> bool:
         if point_buf is None or poly_buf is None:
@@ -92,12 +92,12 @@ def point_covered_by(geom: pd.Series, poly_wkb: pd.Series) -> pd.Series:
         if kind != "multipoint" or not pts:
             return False
         _, polys = gwkb.decode(poly_buf)
-        p = _to_int(pts[0])
+        p = to_grid(pts[0])
         for rings in polys:
-            shell = [_to_int(v) for v in rings[0]]
-            if _point_in_ring(p, shell):
+            shell = [to_grid(v) for v in rings[0]]
+            if point_in_ring(p, shell):
                 in_hole = any(
-                    _point_in_ring(p, [_to_int(v) for v in hole])
+                    point_in_ring(p, [to_grid(v) for v in hole])
                     for hole in rings[1:]
                 )
                 if not in_hole:

@@ -18,6 +18,8 @@ must be passed through untouched (reference comment map2db.py:907-911).
 
 from __future__ import annotations
 
+from map2db_spark.geometry.exact import ring_area2
+
 
 def snap(v: float) -> float:
     """Snap a coordinate to the microdegree grid (grid_size=1e-6)."""
@@ -122,16 +124,6 @@ def clip_lines(lines, box):
     return out
 
 
-def _ring_area2(ring) -> float:
-    """Twice the signed area (positive = counter-clockwise)."""
-    s = 0.0
-    for i in range(len(ring) - 1):
-        x0, y0 = ring[i]
-        x1, y1 = ring[i + 1]
-        s += x0 * y1 - x1 * y0
-    return s
-
-
 def clip_ring(ring, box):
     """Sutherland-Hodgman clip of a closed ring against the box.
     Input/output rings are closed (first == last).  Returns [] if the
@@ -187,7 +179,7 @@ def clip_ring(ring, box):
     if len(dedup) < 3:
         return []
     closed = dedup + [dedup[0]]
-    if _ring_area2(closed) == 0.0:
+    if ring_area2(closed) == 0.0:
         return []
     return closed
 

@@ -22,6 +22,8 @@ construction order yields identical WKB.
 
 from __future__ import annotations
 
+from map2db_spark.geometry.exact import ring_area2
+
 
 def normalize_multipoint(points):
     return sorted(set(points))
@@ -41,22 +43,13 @@ def normalize_multilinestring(lines):
     return sorted((normalize_line(list(ln)) for ln in lines), key=_seq_cmp_key)
 
 
-def _ring_area2(ring) -> float:
-    s = 0.0
-    for i in range(len(ring) - 1):
-        x0, y0 = ring[i]
-        x1, y1 = ring[i + 1]
-        s += x0 * y1 - x1 * y0
-    return s
-
-
 def normalize_ring(ring, clockwise: bool):
     """Closed ring -> starts at min vertex, given orientation."""
     pts = list(ring[:-1]) if ring[0] == ring[-1] else list(ring)
     i0 = min(range(len(pts)), key=lambda i: pts[i])
     pts = pts[i0:] + pts[:i0]
     closed = pts + [pts[0]]
-    is_ccw = _ring_area2(closed) > 0
+    is_ccw = ring_area2(closed) > 0
     if is_ccw == clockwise:
         # reverse, keeping the start vertex first
         pts = [pts[0]] + pts[1:][::-1]

@@ -44,15 +44,17 @@ import math
 from collections import Counter, defaultdict
 from fractions import Fraction
 
-from map2db_spark.geometry.normalize import normalize_multipolygon
-from map2db_spark.geometry.repair import (
-    _cross_point,
-    _on_segment,
-    _properly_cross,
-    _ring_area2_int,
+from map2db_spark.geometry.exact import (
+    closed_int_ring,
+    cross_point,
+    from_grid,
+    on_segment,
+    point_in_ring,
+    properly_cross,
+    ring_area2,
 )
-
-SCALE = 1_000_000
+from map2db_spark.geometry.normalize import normalize_multipolygon
+from map2db_spark.geometry.repair import repair_ring
 
 
 class FragmentOverlapError(ValueError):
@@ -63,38 +65,20 @@ class FragmentOverlapError(ValueError):
     unrepresentable on the microdegree grid)."""
 
 
-def _to_int(p):
-    return (int(round(p[0] * SCALE)), int(round(p[1] * SCALE)))
-
-
-def _to_float(p):
-    return (p[0] / SCALE, p[1] / SCALE)
-
-
-def _directed_ring_edges(fragments):
-    """All input rings as directed integer edges, shells CCW and holes
-    CW (interior on the left), zero-area rings dropped."""
+def directed_ring_edges(fragments):
+    """All input rings as directed grid edges, shells CCW and holes CW
+    (interior on the left), zero-area rings dropped."""
     edges = []
     for frag in fragments:
         for rings in frag:
             for k, ring in enumerate(rings):
-                r = [_to_int(p) for p in ring]
-                rr = []
-                for p in r:
-                    if not rr or p != rr[-1]:
-                        rr.append(p)
-                if len(rr) >= 2 and rr[0] == rr[-1]:
-                    rr.pop()
-                if len(rr) < 3:
-                    continue
-                rr.append(rr[0])
-                a2 = _ring_area2_int(rr)
+                r = closed_int_ring(ring)
+                a2 = ring_area2(r)
                 if a2 == 0:
                     continue
                 if (a2 > 0) != (k == 0):  # shells CCW, holes CW
-                    rr = rr[::-1]
-                for i in range(len(rr) - 1):
-                    edges.append((rr[i], rr[i + 1]))
+                    r = r[::-1]
+                edges.extend(zip(r, r[1:]))
     return edges
 
 
@@ -114,7 +98,7 @@ def _node_arrangement(edges, max_rounds: int = 16):
             xlo, xhi = min(a[0], b[0]), max(a[0], b[0])
             ylo, yhi = min(a[1], b[1]), max(a[1], b[1])
             for p in verts:
-                if xlo <= p[0] <= xhi and ylo <= p[1] <= yhi and _on_segment(a, b, p):
+                if xlo <= p[0] <= xhi and ylo <= p[1] <= yhi and on_segment(a, b, p):
                     splits[i].add(p)
         # proper crossings -> rational cross point snapped to grid
         for i in range(len(edges)):
@@ -128,8 +112,8 @@ def _node_arrangement(edges, max_rounds: int = 16):
                     or max(c[1], d[1]) < ylo or yhi < min(c[1], d[1])
                 ):
                     continue
-                if _properly_cross(a, b, c, d):
-                    p = _cross_point(a, b, c, d)
+                if properly_cross(a, b, c, d):
+                    p = cross_point(a, b, c, d)
                     if p != a and p != b:
                         splits[i].add(p)
                     if p != c and p != d:
@@ -153,11 +137,11 @@ def _node_arrangement(edges, max_rounds: int = 16):
     raise FragmentOverlapError("noding-did-not-converge")
 
 
-def _net_multiplicities(edges):
-    """Cancel exact opposite directed duplicates: {directed edge: net
-    multiplicity > 0} (an edge bordered by interior on both sides in
-    opposite directions nets to zero and carries no winding change)."""
-    count = Counter(edges)
+def net_multiplicities(count):
+    """{directed edge: count} -> {directed edge: net multiplicity > 0}:
+    exact opposite directed duplicates cancel (an edge bordered by
+    interior on both sides in opposite directions nets to zero and
+    carries no winding change)."""
     mult: dict = {}
     for (u, v), n in count.items():
         if (u, v) in mult or (v, u) in mult:
@@ -258,23 +242,21 @@ def assemble_polygons(rings):
     into simple loops first (repair.py's vertex-stack sweep), each
     loop keeping the walk's interior-on-the-left orientation, so the
     area-sign classification below stays correct."""
-    from map2db_spark.geometry.repair import _point_in_ring, _repair_ring
-
     shells = []
     holes = []
     for chained in rings:
-        for r in _repair_ring(chained):
-            a2 = _ring_area2_int(r)
+        for r in repair_ring(chained):
+            a2 = ring_area2(r)
             if a2 > 0:
                 shells.append(r)
             elif a2 < 0:
                 holes.append(r)
-    result = [[[_to_float(p) for p in s]] for s in shells]
+    result = [[[from_grid(p) for p in s]] for s in shells]
     for h in holes:
         probe = h[0]
         for i, s in enumerate(shells):
-            if _point_in_ring(probe, s):
-                result[i].append([_to_float(p) for p in h])
+            if point_in_ring(probe, s):
+                result[i].append([from_grid(p) for p in h])
                 break
     return normalize_multipolygon(result)
 
@@ -285,10 +267,10 @@ def union_overlay(fragments):
 
     Reference semantics: map2db.py:776-784 (GEOS ``.union()``); exact
     up to the microdegree grid snap of crossing points."""
-    edges = _directed_ring_edges(fragments)
+    edges = directed_ring_edges(fragments)
     if not edges:
         return []
-    mult = _net_multiplicities(_node_arrangement(edges))
+    mult = net_multiplicities(Counter(_node_arrangement(edges)))
     if not mult:
         return []
     lmax2 = max(

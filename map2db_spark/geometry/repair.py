@@ -24,120 +24,25 @@ lands outside every repaired shell) are *rejected with a reason* — the
 caller routes them to an auditable rejects path, mirroring the
 reference's discard-with-log, never silently keeping a wrong polygon.
 
-All predicates run on integer microdegrees; intersection points are
-computed rationally and rounded half-away to the grid (the same
-snapping contract as the rest of the kernel).
+All predicates are the exact grid predicates of geometry/exact.py:
+intersection points are computed rationally and rounded half-away to
+the grid (the snapping contract of the whole kernel).
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
-from fractions import Fraction
 
-SCALE = 1_000_000
-
-
-def _to_int(p):
-    return (int(round(p[0] * SCALE)), int(round(p[1] * SCALE)))
-
-
-def _to_float(p):
-    return (p[0] / SCALE, p[1] / SCALE)
-
-
-def _sign(x) -> int:
-    return (x > 0) - (x < 0)
-
-
-def _orient3(p, q, r) -> int:
-    return _sign((q[0] - p[0]) * (r[1] - p[1]) - (q[1] - p[1]) * (r[0] - p[0]))
-
-
-def _on_segment(a, b, p) -> bool:
-    """p strictly between a and b, collinear (integer-exact)."""
-    if p == a or p == b:
-        return False
-    if _orient3(a, b, p) != 0:
-        return False
-    return (
-        min(a[0], b[0]) <= p[0] <= max(a[0], b[0])
-        and min(a[1], b[1]) <= p[1] <= max(a[1], b[1])
-    )
-
-
-def _properly_cross(a, b, c, d) -> bool:
-    o1, o2 = _orient3(a, b, c), _orient3(a, b, d)
-    o3, o4 = _orient3(c, d, a), _orient3(c, d, b)
-    return o1 * o2 < 0 and o3 * o4 < 0
-
-
-def _round_half_away(fr: Fraction) -> int:
-    n, d = fr.numerator, fr.denominator  # d > 0
-    if n >= 0:
-        return (2 * n + d) // (2 * d)
-    return -((-2 * n + d) // (2 * d))
-
-
-def _cross_point(a, b, c, d):
-    """Intersection point of properly-crossing segments ab, cd,
-    rounded half-away to the integer grid (exact rational solve)."""
-    r = (b[0] - a[0], b[1] - a[1])
-    s = (d[0] - c[0], d[1] - c[1])
-    denom = r[0] * s[1] - r[1] * s[0]
-    t = Fraction((c[0] - a[0]) * s[1] - (c[1] - a[1]) * s[0], denom)
-    return (
-        _round_half_away(a[0] + t * r[0]),
-        _round_half_away(a[1] + t * r[1]),
-    )
-
-
-def _ring_area2_int(ring) -> int:
-    s = 0
-    for i in range(len(ring) - 1):
-        x0, y0 = ring[i]
-        x1, y1 = ring[i + 1]
-        s += x0 * y1 - x1 * y0
-    return s
-
-
-def _point_in_ring(p, ring) -> bool:
-    """Even-odd, integer-exact; boundary counts as inside."""
-    x, y = p
-    inside = False
-    for i in range(len(ring) - 1):
-        a, b = ring[i], ring[i + 1]
-        if p == a or _on_segment(a, b, p):
-            return True
-        if (a[1] > y) != (b[1] > y):
-            xnum = (b[0] - a[0]) * (y - a[1])
-            xden = b[1] - a[1]
-            lhs = (x - a[0]) * xden
-            if (lhs < xnum) if xden > 0 else (lhs > xnum):
-                inside = not inside
-    return inside
-
-
-def _on_ring_boundary(p, ring) -> bool:
-    for i in range(len(ring) - 1):
-        if p == ring[i] or _on_segment(ring[i], ring[i + 1], p):
-            return True
-    return False
-
-
-def _closed_int_ring(ring):
-    """Float ring -> closed int ring with consecutive duplicates
-    dropped; None if fewer than 3 distinct vertices remain."""
-    r = [_to_int(p) for p in ring]
-    out = []
-    for p in r:
-        if not out or p != out[-1]:
-            out.append(p)
-    if len(out) >= 2 and out[0] == out[-1]:
-        out.pop()
-    if len(out) < 3:
-        return None
-    return out + [out[0]]
-
+from map2db_spark.geometry.exact import (
+    closed_int_ring,
+    cross_point,
+    from_grid,
+    on_ring_boundary,
+    on_segment,
+    point_in_ring,
+    properly_cross,
+    ring_area2,
+)
 
 _SWEEP_THRESHOLD = 128  # rings above this use the interval sweep
 
@@ -177,7 +82,7 @@ def _ring_is_simple_sweep(r) -> bool:
                 continue  # same or adjacent edge (incl. closure)
             if max(c[1], d[1]) < ay0 or ay1 < min(c[1], d[1]):
                 continue
-            if _properly_cross(a, b, c, d):
+            if properly_cross(a, b, c, d):
                 return False
     sv = sorted(verts)
     xs = [p[0] for p in sv]
@@ -185,7 +90,7 @@ def _ring_is_simple_sweep(r) -> bool:
         lo = bisect.bisect_left(xs, x0)
         hi = bisect.bisect_right(xs, x1)
         for p in sv[lo:hi]:
-            if _on_segment(a, b, p):
+            if on_segment(a, b, p):
                 return False
     return True
 
@@ -201,13 +106,13 @@ def _ring_is_simple(r) -> bool:
     edges = [(r[i], r[i + 1]) for i in range(len(r) - 1)]
     for i, (a, b) in enumerate(edges):
         for p in verts:
-            if _on_segment(a, b, p):
+            if on_segment(a, b, p):
                 return False
         for j in range(i + 2, len(edges)):
             if i == 0 and j == len(edges) - 1:
                 continue  # adjacent through the closure
             c, d = edges[j]
-            if _properly_cross(a, b, c, d):
+            if properly_cross(a, b, c, d):
                 return False
     return True
 
@@ -221,12 +126,12 @@ def _node_walk(r):
     verts = set(r)
     for i, (a, b) in enumerate(edges):
         for p in verts:
-            if _on_segment(a, b, p):
+            if on_segment(a, b, p):
                 splits[i].add(p)
         for j in range(i + 1, len(edges)):
             c, d = edges[j]
-            if _properly_cross(a, b, c, d):
-                p = _cross_point(a, b, c, d)
+            if properly_cross(a, b, c, d):
+                p = cross_point(a, b, c, d)
                 if p != a and p != b:
                     splits[i].add(p)
                 if p != c and p != d:
@@ -269,7 +174,7 @@ def _decompose(walk):
     return loops
 
 
-def _repair_ring(r):
+def repair_ring(r):
     """Closed int ring -> list of simple loops with nonzero area.
 
     Iterated to a fixpoint: rounding a crossing to the grid can place
@@ -281,19 +186,19 @@ def _repair_ring(r):
     progress (or survives all rounds non-simple) is DROPPED like a
     zero-area loop — never emitted invalid."""
     if _ring_is_simple(r):
-        return [r] if _ring_area2_int(r) != 0 else []
+        return [r] if ring_area2(r) != 0 else []
     out = []
     pending = [r]
     for _ in range(8):
         nxt = []
         for lp in pending:
             if _ring_is_simple(lp):
-                if _ring_area2_int(lp) != 0:
+                if ring_area2(lp) != 0:
                     out.append(lp)
                 continue
             loops = [
                 l for l in _decompose(_node_walk(lp))
-                if _ring_area2_int(l) != 0
+                if ring_area2(l) != 0
             ]
             if loops == [lp]:
                 continue  # no progress: drop rather than loop forever
@@ -306,7 +211,7 @@ def _repair_ring(r):
     # (valid geometry, don't drop it one round early) and discard only
     # the still-non-simple stragglers.
     for lp in pending:
-        if _ring_is_simple(lp) and _ring_area2_int(lp) != 0:
+        if _ring_is_simple(lp) and ring_area2(lp) != 0:
             out.append(lp)
     return out
 
@@ -316,8 +221,8 @@ def _inner_probe(loop, other) -> bool:
     boundary is inside it (loops from one decomposition may share the
     pinch vertex, which sits on both boundaries)."""
     for p in loop[:-1]:
-        if not _on_ring_boundary(p, other):
-            return _point_in_ring(p, other)
+        if not on_ring_boundary(p, other):
+            return point_in_ring(p, other)
     return False
 
 
@@ -326,11 +231,10 @@ def polygons_valid(polys) -> bool:
     every ring simple with nonzero area, holes strictly inside their
     shell, no collapsed rings."""
     for rings in polys:
-        int_rings = [_closed_int_ring(ring) for ring in rings]
-        if any(r is None for r in int_rings) or not int_rings:
-            return False
-        if not all(
-            _ring_is_simple(r) and _ring_area2_int(r) != 0 for r in int_rings
+        # a collapsed ring (< 3 distinct vertices) has zero area
+        int_rings = [closed_int_ring(ring) for ring in rings]
+        if not int_rings or not all(
+            _ring_is_simple(r) and ring_area2(r) != 0 for r in int_rings
         ):
             return False
         if not all(_inner_probe(h, int_rings[0]) for h in int_rings[1:]):
@@ -349,20 +253,20 @@ def make_valid_polygons(polys):
     """
     out = []
     for rings in polys:
-        int_rings = [_closed_int_ring(ring) for ring in rings]
-        int_rings = [r for r in int_rings if r is not None]
+        int_rings = [closed_int_ring(ring) for ring in rings]
+        int_rings = [r for r in int_rings if len(r) > 3]
         if not int_rings:
             continue
         if all(
-            _ring_is_simple(r) and _ring_area2_int(r) != 0 for r in int_rings
+            _ring_is_simple(r) and ring_area2(r) != 0 for r in int_rings
         ) and all(_inner_probe(h, int_rings[0]) for h in int_rings[1:]):
             out.append([list(ring) for ring in rings])
             continue
 
-        shell_loops = _repair_ring(int_rings[0])
+        shell_loops = repair_ring(int_rings[0])
         hole_loops = []
         for hr in int_rings[1:]:
-            hole_loops.extend(_repair_ring(hr))
+            hole_loops.extend(repair_ring(hr))
         if not shell_loops:
             continue  # this polygon dissolved to nothing
 
@@ -392,7 +296,7 @@ def make_valid_polygons(polys):
             if not placed and hole in hole_loops:
                 return None, "hole-outside-shell"
         out.extend(
-            [[[_to_float(p) for p in ring] for ring in poly] for poly in polys_out]
+            [[[from_grid(p) for p in ring] for ring in poly] for poly in polys_out]
         )
     if not out:
         return None, "no-area-after-repair"

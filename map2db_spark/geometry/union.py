@@ -24,16 +24,26 @@ after normalization).
 Fragments with OVERLAPPING interiors — outside the tile-fragment
 contract but inside the reference's ``.union()`` semantics — are
 detected exactly and routed to the winding-number overlay
-(geometry/overlay.py), so ``union_polygons`` now computes the general
-union like the reference instead of raising; ``on_overlap="raise"``
-restores the strict contract for callers (the consolidate pipeline)
-that must surface overlap as a data violation.
+(geometry/overlay.py), so ``union_polygons`` computes the general
+union like the reference; ``on_overlap="raise"`` keeps the strict
+contract for callers (the consolidate pipeline) that must surface
+overlap as a data violation.  The dissolve stays as the fast path for
+the disjoint case: it skips the overlay's crossing search and
+per-edge winding probes, and gives the same polygons there
+(tests/test_operators.py pins the agreement).
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
 
+from map2db_spark.geometry.exact import (
+    closed_int_ring,
+    on_ring_boundary,
+    on_segment,
+    point_in_ring,
+    properly_cross,
+)
 from map2db_spark.geometry.normalize import (
     normalize_line,
     normalize_multilinestring,
@@ -44,6 +54,8 @@ from map2db_spark.geometry.overlay import (
     FragmentOverlapError,
     assemble_polygons,
     chain_rings,
+    directed_ring_edges,
+    net_multiplicities,
     union_overlay,
 )
 
@@ -53,17 +65,6 @@ __all__ = [
     "union_lines",
     "union_polygons",
 ]
-
-SCALE = 1_000_000
-
-
-def _to_int(p):
-    return (int(round(p[0] * SCALE)), int(round(p[1] * SCALE)))
-
-
-def _to_float(p):
-    return (p[0] / SCALE, p[1] / SCALE)
-
 
 def union_points(fragments):
     """fragments: iterable of point lists -> deduped sorted point list."""
@@ -87,86 +88,14 @@ def union_lines(fragments):
     return normalize_multilinestring(out)
 
 
-def _ring_area2_int(ring) -> int:
-    s = 0
-    for i in range(len(ring) - 1):
-        x0, y0 = ring[i]
-        x1, y1 = ring[i + 1]
-        s += x0 * y1 - x1 * y0
-    return s
-
-
-def _orient(ring, ccw: bool):
-    closed = ring if ring[0] == ring[-1] else ring + [ring[0]]
-    area2 = _ring_area2_int(closed)
-    if area2 == 0:
-        return None
-    if (area2 > 0) != ccw:
-        closed = closed[::-1]
-    return closed
-
-
-def _on_segment(a, b, p) -> bool:
-    """p strictly between a and b, collinear (integer-exact)."""
-    if p == a or p == b:
-        return False
-    cross = (b[0] - a[0]) * (p[1] - a[1]) - (b[1] - a[1]) * (p[0] - a[0])
-    if cross != 0:
-        return False
-    return (
-        min(a[0], b[0]) <= p[0] <= max(a[0], b[0])
-        and min(a[1], b[1]) <= p[1] <= max(a[1], b[1])
-    )
-
-
-def _point_in_ring(p, ring) -> bool:
-    """Even-odd rule, integer-exact; boundary counts as inside."""
-    x, y = p
-    inside = False
-    for i in range(len(ring) - 1):
-        a, b = ring[i], ring[i + 1]
-        if p == a or _on_segment(a, b, p):
-            return True
-        if (a[1] > y) != (b[1] > y):
-            # x < x-coordinate of edge at height y (exact rational compare)
-            xnum = (b[0] - a[0]) * (y - a[1])
-            xden = b[1] - a[1]
-            lhs = (x - a[0]) * xden
-            if xden > 0:
-                if lhs < xnum:
-                    inside = not inside
-            else:
-                if lhs > xnum:
-                    inside = not inside
-    return inside
-
-
-def _sign(x: int) -> int:
-    return (x > 0) - (x < 0)
-
-
-def _properly_cross(a, b, c, d) -> bool:
-    """Segments ab and cd intersect at a point interior to both
-    (integer-exact; shared endpoints / T-touches / collinear overlaps
-    do NOT count — those are legitimate tile-boundary contact)."""
-    def orient(p, q, r):
-        return _sign((q[0] - p[0]) * (r[1] - p[1]) - (q[1] - p[1]) * (r[0] - p[0]))
-
-    o1, o2 = orient(a, b, c), orient(a, b, d)
-    o3, o4 = orient(c, d, a), orient(c, d, b)
-    return o1 * o2 < 0 and o3 * o4 < 0
-
-
 def _strictly_inside(p, rings) -> bool:
     """p in the polygon's open interior: inside the shell, on no ring
-    boundary, inside no hole (all integer-exact)."""
-    for ring in rings:
-        for i in range(len(ring) - 1):
-            if p == ring[i] or _on_segment(ring[i], ring[i + 1], p):
-                return False
-    if not _point_in_ring(p, rings[0]):
+    boundary, inside no hole."""
+    if any(on_ring_boundary(p, ring) for ring in rings):
         return False
-    return not any(_point_in_ring(p, hole) for hole in rings[1:])
+    return point_in_ring(p, rings[0]) and not any(
+        point_in_ring(p, hole) for hole in rings[1:]
+    )
 
 
 def _frag_overlap_reason(frag_polys) -> str | None:
@@ -186,13 +115,10 @@ def _frag_overlap_reason(frag_polys) -> str | None:
         for rings in polys:
             poly_rings = []
             for ring in rings:
-                r = [_to_int(p) for p in ring]
-                if r[0] != r[-1]:
-                    r = r + [r[0]]
+                r = closed_int_ring(ring)
                 poly_rings.append(r)
-                for i in range(len(r) - 1):
-                    if r[i] != r[i + 1]:
-                        edges.append((r[i], r[i + 1]))
+                if len(r) > 2:  # a one-vertex ring has no edge
+                    edges.extend(zip(r, r[1:]))
             if poly_rings:
                 rings_int.append(poly_rings)
         if not edges:
@@ -223,7 +149,7 @@ def _frag_overlap_reason(frag_polys) -> str | None:
                         or ebb[3] < min(c[1], d[1]) or max(c[1], d[1]) < ebb[1]
                     ):
                         continue
-                    if _properly_cross(u, v, c, d):
+                    if properly_cross(u, v, c, d):
                         return "edges-cross"
             for rings_j in rj:
                 for u, _v in ei:
@@ -251,33 +177,28 @@ def union_polygons(fragments, on_overlap: str = "overlay"):
       (map2db.py:776-784);
     - ``"raise"``: raise FragmentOverlapError — the strict contract
       for pipelines that must surface overlap as a data violation
-      instead of silently dissolving it (operators/consolidate.py);
-    - ``"assume-disjoint"``: skip the O(n^2) detection probes (the
-      caller guarantees the contract); the free same-direction
-      boundary check below still raises on exact duplicates."""
+      instead of silently dissolving it (operators/consolidate.py)."""
+    if on_overlap not in ("overlay", "raise"):
+        raise ValueError(
+            f"on_overlap must be 'overlay' or 'raise', got {on_overlap!r}"
+        )
     fragments = [list(frag) for frag in fragments]
     polys = [poly for frag in fragments for poly in frag]
     if len(polys) == 1:
         return normalize_multipolygon(polys)
-    if on_overlap != "assume-disjoint":
-        reason = _frag_overlap_reason(fragments)
-        if reason is not None:
-            if on_overlap == "raise":
-                raise FragmentOverlapError(reason)
-            return union_overlay(fragments)
+    reason = _frag_overlap_reason(fragments)
+    if reason is not None:
+        if on_overlap == "raise":
+            raise FragmentOverlapError(reason)
+        return union_overlay(fragments)
 
-    # 1. orient (shells CCW, holes CW) and convert to exact integers,
+    # 1. orient (shells CCW, holes CW) on the exact grid,
     #    remembering which fragment each directed edge came from
-    directed = []  # (frag_idx, u, v)
-    for fi, frag in enumerate(fragments):
-        for rings in frag:
-            for k, ring in enumerate(rings):
-                r = _orient([_to_int(p) for p in ring], ccw=(k == 0))
-                if r is None:
-                    continue
-                for i in range(len(r) - 1):
-                    if r[i] != r[i + 1]:
-                        directed.append((fi, r[i], r[i + 1]))
+    directed = [
+        (fi, u, v)
+        for fi, frag in enumerate(fragments)
+        for u, v in directed_ring_edges([frag])
+    ]
 
     # 2. node edges at any vertex lying on them (shared-boundary splits)
     vertices = set()
@@ -286,7 +207,7 @@ def union_polygons(fragments, on_overlap: str = "overlay"):
         vertices.add(v)
     noded = []
     for fi, u, v in directed:
-        splits = [p for p in vertices if _on_segment(u, v, p)]
+        splits = [p for p in vertices if on_segment(u, v, p)]
         if not splits:
             noded.append((fi, u, v))
             continue
@@ -317,17 +238,14 @@ def union_polygons(fragments, on_overlap: str = "overlay"):
     # fragments (e.g. an exactly duplicated polygon), which the
     # crossing/containment probes cannot see.
     if any(n >= 2 for n in count.values()):
-        if on_overlap == "raise" or on_overlap == "assume-disjoint":
+        if on_overlap == "raise":
             raise FragmentOverlapError("coincident-boundary-same-direction")
         return union_overlay(fragments)
 
     # 3c. cancel opposite pairs across fragments (shared tile-boundary
-    # runs disappear; net counts equal global cancellation)
-    survivors = []
-    for (u, v), n in sorted(count.items()):
-        m = count.get((v, u), 0)
-        keep = n - min(n, m)
-        survivors.extend([(u, v)] * keep)
+    # runs disappear); every count is 1 here, so each survivor is one
+    # edge
+    survivors = net_multiplicities(count)
 
     # 4+5. chain into rings (leftmost-turn walk keeps rings simple at
     # degree>2 junctions) and classify shells/holes — shared with the

@@ -3,8 +3,9 @@
 
 The reference streams tiles in reverse level order and upserts into
 SQLite so that "the least simplified geometry wins" falls out of
-ordering.  Here the same semantics are a single ``groupBy(ftype, fid)``
-aggregate, which is what unlocks parallel execution:
+ordering.  Here the same semantics are one keyed aggregate over
+(ftype, fid) — a repartition on the key and a ``mapInPandas`` kernel
+(see ``consolidate``) — which is what unlocks parallel execution:
 
 - attributes + maxz come from the *highest* level sighting (argmax);
 - geometry is the union of the fragments at that highest level;

@@ -118,9 +118,15 @@ def map2db(
     is pinned table-by-table in tests/test_pipeline_e2e.py
     (test_sink_parity_parquet_vs_sqlite).  For dbl maps both write the
     forgemap TOML config next to the output.  Returns a summary dict
-    with counts/license/vtag_cols (+ paths for parquet)."""
+    with counts/license/vtag_cols (+ paths for parquet).
+
+    The run releases every RDD it persisted or checkpointed (any RDD
+    that became persistent during the call), so repeated conversions
+    in one application do not accumulate cached blocks."""
     if sink not in ("parquet", "sqlite"):
         raise ValueError(f"sink must be 'parquet' or 'sqlite', got {sink!r}")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    held_before = set(persistent().keys())
     header = read_header(src_pathname)
     feats = load_features(spark, src_pathname, header).where(
         F.col("ftype") != "reject"  # unreparable geometry: discarded, per reference
@@ -184,3 +190,6 @@ def map2db(
         return result
     finally:
         feats.unpersist()
+        for rdd_id, rdd in persistent().items():
+            if rdd_id not in held_before:
+                rdd.unpersist(False)

@@ -462,7 +462,7 @@ def m2db_overlay_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def union_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        from map2db_spark.geometry.overlay import _ring_area2_int, _to_int
+        from map2db_spark.geometry.exact import ring_area2, to_grid
 
         u = 1e-6
         frags = []
@@ -477,10 +477,10 @@ def m2db_overlay_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         area2 = 0
         for rings in out:
             for idx, ring in enumerate(rings):
-                ir = [_to_int(p) for p in ring]
+                ir = [to_grid(p) for p in ring]
                 if ir[0] != ir[-1]:
                     ir.append(ir[0])
-                a2 = abs(_ring_area2_int(ir))
+                a2 = abs(ring_area2(ir))
                 area2 += a2 if idx == 0 else -a2
         return pd.DataFrame(
             {

@@ -85,12 +85,8 @@ def get_spark(app_name: str = "map2db_spark", cpus: str | None = None) -> SparkS
         # entries bounds metaspace to tens of MB (generated classes
         # are ~10-50 KB) and is equally right on a cluster: the cache
         # is per-JVM and any long-lived multi-query application
-        # (ETL DAGs, Thrift server) exceeds 100 units.  Env-tunable
-        # like the other scale knobs.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "1000"),
-        )
+        # (ETL DAGs, Thrift server) exceeds 100 units.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     ship_package(spark)

@@ -132,16 +132,6 @@ def vtag_key_order(features: DataFrame) -> dict[str, list[str]]:
     return out
 
 
-def _coerce(key: str, value):
-    if value is None:
-        return None
-    if key in _INT_VTAGS:
-        return int(value)
-    if key in _FLOAT_VTAGS:
-        return float(value)
-    return value
-
-
 def write_features(
     dbc: sqlite3.Connection,
     consolidated: DataFrame,

@@ -1,5 +1,6 @@
-"""Docs must not drift from the registry: every registered query is
-cited in COVERAGE.md and the README's coverage count is exact (the
+"""Docs must not drift from the code: every registered query is
+cited in COVERAGE.md, the README's coverage count is exact and the
+README's Architecture block names every pipeline module (the
 judge's checklist stays trustworthy)."""
 
 from __future__ import annotations
@@ -77,3 +78,33 @@ def test_scale_md_sweep_count_matches_registry():
         f"SCALE.md says {m.group(1)}/{m.group(2)}, registry has "
         f"{len(QUERIES)} queries"
     )
+
+
+def test_readme_architecture_names_every_pipeline_module():
+    """Each module file under map2db_spark/{sources,operators,geometry,
+    sinks}/ has its own line in the README's Architecture block, under
+    its package, and the block names no module that is gone."""
+    text = (REPO / "README.md").read_text()
+    block = text.split("## Architecture", 1)[1].split("```")[1]
+    named: dict[str, set[str]] = {}
+    package = None
+    for line in block.splitlines():
+        m = re.match(r"  (\w+)/", line)
+        if m:
+            package = m.group(1)
+            continue
+        m = re.match(r"    (\w+\.py)\b", line)
+        if m and package:
+            named.setdefault(package, set()).add(m.group(1))
+        elif re.match(r"  \S", line):
+            package = None
+    for package in ["sources", "operators", "geometry", "sinks"]:
+        files = {
+            f.name for f in (REPO / "map2db_spark" / package).glob("*.py")
+            if f.name != "__init__.py"
+        }
+        assert named.get(package, set()) == files, (
+            package,
+            sorted(files - named.get(package, set())),
+            sorted(named.get(package, set()) - files),
+        )

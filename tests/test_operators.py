@@ -161,7 +161,8 @@ def _area2_int(polys):
     """Sum over polygons of |shell double-area| minus |hole
     double-areas| (µdeg² units) — the union's exact area × 2,
     independent of the normalizer's ring-orientation convention."""
-    from map2db_spark.geometry.overlay import _ring_area2_int, _to_int
+    from map2db_spark.geometry.exact import ring_area2 as _ring_area2_int
+    from map2db_spark.geometry.exact import to_grid as _to_int
 
     total = 0
     for rings in polys:
@@ -176,8 +177,8 @@ def _area2_int(polys):
 
 def _covered_by_any(p_int, fragments):
     """p covered by >= 1 input polygon (shell minus holes, exact)."""
-    from map2db_spark.geometry.overlay import _to_int
-    from map2db_spark.geometry.repair import _point_in_ring
+    from map2db_spark.geometry.exact import point_in_ring as _point_in_ring
+    from map2db_spark.geometry.exact import to_grid as _to_int
 
     for frag in fragments:
         for rings in frag:
@@ -201,8 +202,9 @@ def test_union_overlay_matches_pointwise_coverage():
     probe points must agree between 'covered by the union result' and
     'covered by any input fragment', and the union area must match
     the inclusion-exclusion value exactly."""
-    from map2db_spark.geometry.overlay import _to_int
-    from map2db_spark.geometry.repair import _on_ring_boundary, _point_in_ring
+    from map2db_spark.geometry.exact import on_ring_boundary as _on_ring_boundary
+    from map2db_spark.geometry.exact import point_in_ring as _point_in_ring
+    from map2db_spark.geometry.exact import to_grid as _to_int
 
     sq = _sq
     u = 1e-6  # 1 µdeg in degrees
@@ -284,10 +286,15 @@ def test_overlay_agrees_with_dissolve_on_disjoint_fragments():
     """Consistency of the two G5 engines: for inputs INSIDE the
     tile-fragment contract (disjoint interiors, shared boundary runs)
     the general winding-number overlay must produce exactly the same
-    multipolygon as the edge-cancellation dissolve fast path."""
+    multipolygon as the edge-cancellation dissolve fast path, on
+    hand-built unit cells and on tile-clipped random polygons."""
     import itertools
+    import math
+    import random
 
+    from map2db_spark.geometry.clip import clip_polygons
     from map2db_spark.geometry.overlay import union_overlay
+    from map2db_spark.sources.tilemath import tile_bounds_deg, x_from_lon, y_from_lat
 
     u = 1e-6
     q = lambda x0, y0: _sq(x0 * u, y0 * u, u)
@@ -312,6 +319,39 @@ def test_overlay_agrees_with_dissolve_on_disjoint_fragments():
         # and order independence of the general path on these inputs
         for perm in itertools.islice(itertools.permutations(frags), 6):
             assert union_overlay(list(perm)) == fast
+
+    # the shape consolidate feeds the union: seeded random simple
+    # 6-12-gons on the microdegree grid (one vertex per equal angular
+    # sector around the center, so the ring is star-shaped), clipped to
+    # the z12 tiles they span
+    rng = random.Random(20261018)
+    spanning = 0
+    for trial in range(40):
+        cx, cy = rng.uniform(-60.0, 60.0), rng.uniform(-60.0, 60.0)
+        r = rng.uniform(0.03, 0.15)
+        n = rng.randint(6, 12)
+        angles = [(k + rng.random()) * 2 * math.pi / n for k in range(n)]
+        ring = []
+        for a in angles:
+            rr = r * rng.uniform(0.3, 1.0)
+            ring.append(
+                (round(cx + rr * math.cos(a), 6), round(cy + rr * math.sin(a), 6))
+            )
+        ring.append(ring[0])
+        lons = [p[0] for p in ring]
+        lats = [p[1] for p in ring]
+        xs = range(int(x_from_lon(12, min(lons))), int(x_from_lon(12, max(lons))) + 1)
+        ys = range(int(y_from_lat(12, max(lats))), int(y_from_lat(12, min(lats))) + 1)
+        frags = []
+        for tx in xs:
+            for ty in ys:
+                frag = clip_polygons([[ring]], tile_bounds_deg(12, tx, ty))
+                if frag:
+                    frags.append(frag)
+        spanning += len(frags) > 1
+        fast = union_polygons(frags, on_overlap="raise")
+        assert union_overlay(frags) == fast, (trial, ring)
+    assert spanning >= 30, spanning
 
 
 def test_union_overlay_fuzz_vs_cell_decomposition():

@@ -418,3 +418,15 @@ def test_parquet_sink_zero_row_ftype(spark, tmp_path):
     out = str(tmp_path / "points_only_pq")
     result = map2db(spark, src, out, sink="parquet")
     assert result["counts"] == {"points": 1, "lines": 0, "areas": 0}
+
+
+@pytest.mark.parametrize("sink", ["parquet", "sqlite"])
+def test_map2db_releases_persistent_rdds(spark, dbl_path, tmp_path, sink):
+    """map2db() persists the decoded features and local-checkpoints
+    the consolidated (and, for parquet, the final) frame; none of them
+    may outlive the call."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    out = str(tmp_path / ("out.db" if sink == "sqlite" else "out"))
+    map2db(spark, dbl_path, out, sink=sink)
+    assert set(persistent().keys()) == before

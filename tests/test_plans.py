@@ -2112,7 +2112,7 @@ def test_codegen_class_cache_sized_past_bench_working_set(spark):
     Janino recompilation (d_minhash_lsh 214-263 ms/sample, ~1.26 s of
     pure compile per bench pass); at 1000 entries the same timed
     passes compile 0 ms and the pass total fell 11.57 -> 9.48 s
-    same-session.  The knob is per-JVM, scale-independent (any
-    long-lived multi-query app exceeds 100 units) and env-tunable
-    (SPARK_GRAFT_CODEGEN_CACHE)."""
+    same-session.  The knob is per-JVM and scale-independent (any
+    long-lived multi-query app exceeds 100 units), so the session sets
+    a fixed 1000."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000

@@ -207,7 +207,8 @@ def test_overlay_union_fuzz_valid_and_area_within_snap_tolerance():
     import math
     import random
 
-    from map2db_spark.geometry.repair import _ring_area2_int, polygons_valid
+    from map2db_spark.geometry.exact import ring_area2 as _ring_area2_int
+    from map2db_spark.geometry.repair import polygons_valid
     from map2db_spark.geometry.union import union_polygons
 
     u = 1e-6
