@@ -254,13 +254,16 @@ def make_valid_polygons(polys):
     out = []
     for rings in polys:
         int_rings = [closed_int_ring(ring) for ring in rings]
-        int_rings = [r for r in int_rings if len(r) > 3]
-        if not int_rings:
+        # a collapsed ring (< 3 distinct vertices) has no area: a
+        # collapsed shell drops the polygon, a collapsed hole is dropped
+        if not int_rings or len(int_rings[0]) <= 3:
             continue
+        kept = [i for i, r in enumerate(int_rings) if len(r) > 3]
+        int_rings = [int_rings[i] for i in kept]
         if all(
             _ring_is_simple(r) and ring_area2(r) != 0 for r in int_rings
         ) and all(_inner_probe(h, int_rings[0]) for h in int_rings[1:]):
-            out.append([list(ring) for ring in rings])
+            out.append([list(rings[i]) for i in kept])
             continue
 
         shell_loops = repair_ring(int_rings[0])

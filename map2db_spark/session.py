@@ -6,9 +6,11 @@ env vars for local testing:
 - AQE on: runtime partition coalescing + skew-join splitting.  Tile
   feature density is heavily skewed (city tiles vs ocean tiles), and
   TPC-H-ish keys are Zipfian in `events`.
-- shuffle.partitions sized to cores locally; on a real cluster AQE's
-  coalescing makes the static number mostly irrelevant as long as it
-  is an upper bound.
+- shuffle.partitions sized to cores locally; on a real cluster set it
+  to the cluster's cores.  AQE coalesces most shuffles below it, but
+  ``consolidate`` repartitions to exactly this count (its union kernel
+  is CPU-heavy on a few MB of shuffle, which AQE would fold into one
+  task), so it is the task count of that stage.
 - Arrow on: every Python-side kernel in this engine is an Arrow-batched
   pandas UDF / mapInPandas — never row-at-a-time Python.
 - session timezone pinned to UTC so timestamp semantics match the
@@ -48,6 +50,39 @@ def ship_package(spark: SparkSession) -> None:
             zf.write(f, f"map2db_spark/{f.relative_to(pkg_dir)}")
     spark.sparkContext.addPyFile(str(zip_path))
     _PKG_SHIPPED.add(app_id)
+
+
+def pin_worker_zip_directories() -> None:
+    """Make zip-archive cache invalidation a no-op in this Python
+    worker; call first thing in every Python kernel.
+
+    A Spark Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (pyspark ``worker_util.setup_spark_files``).
+    On CPython <= 3.12 that makes every ``zipimporter`` on the worker's
+    path re-read its archive's central directory in pure Python:
+    pyspark.zip, the py4j zip, the Spark core jar and the package zip
+    shipped above, ~27k entries and 250-310 ms of CPU per task.  A
+    worker's archives cannot change while it lives (Spark refuses to
+    re-add a file name; a newly added archive gets a fresh importer,
+    which reads its directory), so the re-read is pure waste.
+
+    Does nothing outside a Spark Python worker: the driver rewrites the
+    package zip in ``ship_package`` and keeps the stdlib behaviour.
+    Idempotent; each worker's first task still pays the re-read."""
+    import zipimport
+
+    if getattr(zipimport.zipimporter.invalidate_caches, "_m2db_pinned", False):
+        return
+    from pyspark import TaskContext
+
+    if TaskContext.get() is None:
+        return
+
+    def invalidate_caches(self) -> None:
+        pass
+
+    invalidate_caches._m2db_pinned = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def get_spark(app_name: str = "map2db_spark", cpus: str | None = None) -> SparkSession:

@@ -26,6 +26,8 @@ import sqlite3
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from map2db_spark.session import pin_worker_zip_directories
+
 SRS_WKT = (
     "GEOGCS["
     '"WGS 84",'
@@ -201,6 +203,7 @@ def write_features(
 
     @F.pandas_udf("string")
     def _tags_json(s):
+        pin_worker_zip_directories()
         return s.map(
             lambda t: json.dumps(
                 list(t) if t is not None else [], ensure_ascii=False

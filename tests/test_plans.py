@@ -2116,3 +2116,29 @@ def test_codegen_class_cache_sized_past_bench_working_set(spark):
     long-lived multi-query app exceeds 100 units), so the session sets
     a fixed 1000."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
+
+
+def test_consolidate_shuffle_keeps_every_partition(spark, tmp_path):
+    """consolidate's (ftype, fid) exchange has an explicit count, the
+    session's shuffle.partitions: without one, AQE coalesces a small
+    shuffle into one task, which put the whole union kernel on one
+    core."""
+    from map2db_spark.operators.consolidate import consolidate
+    from map2db_spark.pipeline import load_features
+    from map2db_spark.sources.header import read_header
+    from map2db_spark.sources.sample_maps import dbl_map
+
+    src = str(tmp_path / "dbl.map")
+    dbl_map().write(src)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n > 1
+    cons = consolidate(load_features(spark, src), read_header(src))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        cons.explain("formatted")
+    exchanges = re.findall(
+        r"hashpartitioning\(ftype#\d+, fid#\d+L?, (\d+)\), (\w+)",
+        buf.getvalue(),
+    )
+    assert exchanges == [(str(n), "REPARTITION_BY_NUM")], buf.getvalue()
+    assert cons.rdd.getNumPartitions() == n

@@ -22,6 +22,26 @@ def test_valid_polygon_unchanged():
     assert reason is None and out == [SQ]
 
 
+def test_collapsed_rings_never_reach_the_output():
+    """A ring with fewer than 3 distinct grid vertices has no area: a
+    collapsed hole is dropped from its polygon, and a polygon whose
+    shell collapsed is dropped whole, on the fast path as on the
+    repair path."""
+    from map2db_spark.geometry.repair import polygons_valid
+
+    big = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
+    hole = [(1.0, 1.0), (1.0, 2.0), (2.0, 2.0), (2.0, 1.0), (1.0, 1.0)]
+    a, b = (3.0, 3.0), (3.5, 3.5)
+
+    out, reason = make_valid_polygons([[big, hole, [a, b, a]]])
+    assert reason is None and polygons_valid(out)
+    assert out == [[big, hole]]
+
+    out, reason = make_valid_polygons([SQ, [[a, b, a], hole]])
+    assert reason is None and polygons_valid(out)
+    assert out == [SQ]
+
+
 def test_bowtie_splits_into_two_shells():
     bow = [[[(0.0, 0.0), (2.0, 2.0), (2.0, 0.0), (0.0, 2.0), (0.0, 0.0)]]]
     out, reason = make_valid_polygons(bow)

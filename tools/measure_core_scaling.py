@@ -22,7 +22,7 @@ sandbox host shows intermittent hypervisor steal that in-VM loadavg
 cannot see (BASELINE.md r15 regime note).
 
 Usage:
-    python3 tools/measure_core_scaling.py            # orchestrate 8 vs 32
+    python3 tools/measure_core_scaling.py            # orchestrate host/4 vs host cores
     python3 tools/measure_core_scaling.py --one <cpus> <map_path>
 """
 
@@ -113,8 +113,10 @@ def main() -> None:
         gen_sec = round(time.perf_counter() - t0, 1)
         size_mb = round(os.path.getsize(map_path) / 1e6, 1)
 
+        hi = len(os.sched_getaffinity(0))
+        lo = max(1, hi // 4)
         results = {}
-        for cpus in (32, 8):
+        for cpus in (hi, lo):
             out = subprocess.run(
                 [sys.executable, __file__, "--one", str(cpus), map_path],
                 capture_output=True,
@@ -127,18 +129,18 @@ def main() -> None:
 
         ratios = {
             w: round(
-                results[8][w]["best_sec"] / results[32][w]["best_sec"], 2
+                results[lo][w]["best_sec"] / results[hi][w]["best_sec"], 2
             )
             for w in ("decode_only", "full_pipeline")
         }
         print(
             json.dumps(
                 {
-                    "metric": "pipeline_core_scaling_8_vs_32",
+                    "metric": f"pipeline_core_scaling_{lo}_vs_{hi}",
                     "map_mb": size_mb,
                     "gen_sec": gen_sec,
                     "runs": results,
-                    "ratio_8_over_32": ratios,
+                    f"ratio_{lo}_over_{hi}": ratios,
                 }
             )
         )
