@@ -35,7 +35,6 @@ from map2db_spark.geometry.union import (
     union_points,
     union_polygons,
 )
-from map2db_spark.session import pin_worker_zip_directories
 from map2db_spark.sources.header import MapHeader
 
 CONSOLIDATED_SCHEMA = (
@@ -177,15 +176,15 @@ def consolidate(features, header: MapHeader):
     Still exactly one shuffle on (ftype, fid).
 
     Memory: a task materializes its partition's sightings in pandas.
-    The shuffle has exactly spark.sql.shuffle.partitions partitions:
-    an explicit count is a REPARTITION_BY_NUM shuffle, which AQE does
-    not coalesce.  Without a count AQE folds a small shuffle (a few
-    MB of multi-tile fragments) into ONE task, and the union is
-    the CPU-heavy kernel: on the stitch-zoom benchmark that put 2.0 s
-    of unions on one core of four.  The count is the one AQE starts
-    from anyway, so tasks are never larger than a coalesced plan's;
-    a session left at Spark's default of 200 pays 200 small Python
-    tasks here (``session.get_spark`` sizes it to the cores).
+    The shuffle has an explicit count, spark.sql.shuffle.partitions
+    capped at the cluster's default parallelism: an explicit count is
+    a REPARTITION_BY_NUM shuffle, which AQE does not coalesce.  Without
+    a count AQE folds a small shuffle (a few MB of multi-tile
+    fragments) into ONE task, and the union is the CPU-heavy kernel:
+    on the stitch-zoom benchmark that put 2.0 s of unions on one core
+    of four.  The count is never above the one AQE starts from, and
+    the cap keeps a session left at Spark's default of 200 at one
+    task per core instead of 200 short Python tasks.
 
     Returns the consolidated DataFrame with a ``violation`` column;
     callers filter ``violation IS NULL`` for good rows and surface the
@@ -200,7 +199,6 @@ def consolidate(features, header: MapHeader):
     ]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pin_worker_zip_directories()
         pdfs = [p for p in batches if len(p)]
         if not pdfs:
             return
@@ -253,7 +251,11 @@ def consolidate(features, header: MapHeader):
         else:
             yield multi_out
 
-    n = int(features.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    spark = features.sparkSession
+    n = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
     parted = features.where("fid IS NOT NULL").repartition(n, "ftype", "fid")
     return parted.mapInPandas(kernel, schema=CONSOLIDATED_SCHEMA)
 

@@ -27,7 +27,6 @@ from map2db_spark.geometry import clip as gclip
 from map2db_spark.geometry import normalize as gnorm
 from map2db_spark.geometry import repair as grepair
 from map2db_spark.geometry import wkb as gwkb
-from map2db_spark.session import pin_worker_zip_directories
 from map2db_spark.sources.header import MapHeader
 from map2db_spark.sources.primitives import Cursor
 from map2db_spark.sources.tilemath import tile_bounds_deg, tile_origin_microdeg
@@ -389,7 +388,6 @@ def decode_features(spark, path: str, header: MapHeader, manifest):
     header_bc = spark.sparkContext.broadcast(header)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pin_worker_zip_directories()
         hdr = header_bc.value
         with open(path, "rb") as f:
             for pdf in batches:

@@ -19,7 +19,6 @@ from pyspark.sql.functions import pandas_udf
 
 from map2db_spark.geometry import wkb as gwkb
 from map2db_spark.geometry.linemerge import merge_feature
-from map2db_spark.session import pin_worker_zip_directories
 
 MERGE_STATS_COLS = [
     "was_multi",
@@ -111,7 +110,6 @@ def merge_lines(lines: DataFrame) -> DataFrame:
     cols = lines.columns
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pin_worker_zip_directories()
         from map2db_spark.geometry.normalize import normalize_multilinestring
 
         for pdf in batches:

@@ -8,9 +8,10 @@ env vars for local testing:
   TPC-H-ish keys are Zipfian in `events`.
 - shuffle.partitions sized to cores locally; on a real cluster set it
   to the cluster's cores.  AQE coalesces most shuffles below it, but
-  ``consolidate`` repartitions to exactly this count (its union kernel
-  is CPU-heavy on a few MB of shuffle, which AQE would fold into one
-  task), so it is the task count of that stage.
+  ``consolidate`` repartitions to exactly this count, capped at the
+  default parallelism (its union kernel is CPU-heavy on a few MB of
+  shuffle, which AQE would fold into one task), so it is the task
+  count of that stage.
 - Arrow on: every Python-side kernel in this engine is an Arrow-batched
   pandas UDF / mapInPandas — never row-at-a-time Python.
 - session timezone pinned to UTC so timestamp semantics match the
@@ -54,7 +55,7 @@ def ship_package(spark: SparkSession) -> None:
 
 def pin_worker_zip_directories() -> None:
     """Make zip-archive cache invalidation a no-op in this Python
-    worker; call first thing in every Python kernel.
+    worker; runs once, when a worker first imports this package.
 
     A Spark Python worker calls ``importlib.invalidate_caches()`` at the
     start of every task (pyspark ``worker_util.setup_spark_files``).
@@ -66,9 +67,13 @@ def pin_worker_zip_directories() -> None:
     re-add a file name; a newly added archive gets a fresh importer,
     which reads its directory), so the re-read is pure waste.
 
-    Does nothing outside a Spark Python worker: the driver rewrites the
-    package zip in ``ship_package`` and keeps the stdlib behaviour.
-    Idempotent; each worker's first task still pays the re-read."""
+    A worker imports this module while it unpickles the first kernel
+    that refers to the package, and pyspark sets the task context
+    before it unpickles, so the call at the bottom of this module
+    covers every kernel.  Does nothing outside a Spark Python worker:
+    the driver rewrites the package zip in ``ship_package`` and keeps
+    the stdlib behaviour.  Idempotent; each worker's first task still
+    pays the re-read."""
     import zipimport
 
     if getattr(zipimport.zipimporter.invalidate_caches, "_m2db_pinned", False):
@@ -126,3 +131,6 @@ def get_spark(app_name: str = "map2db_spark", cpus: str | None = None) -> SparkS
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark
+
+
+pin_worker_zip_directories()

@@ -26,8 +26,6 @@ import sqlite3
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from map2db_spark.session import pin_worker_zip_directories
-
 SRS_WKT = (
     "GEOGCS["
     '"WGS 84",'
@@ -134,6 +132,15 @@ def vtag_key_order(features: DataFrame) -> dict[str, list[str]]:
     return out
 
 
+def _tags_json(s):
+    """A Series of tag lists as JSON strings.  Module level, so a Python
+    worker unpickles it by reference: it imports this package, which
+    pins the worker's zip directories (``session``)."""
+    return s.map(
+        lambda t: json.dumps(list(t) if t is not None else [], ensure_ascii=False)
+    )
+
+
 def write_features(
     dbc: sqlite3.Connection,
     consolidated: DataFrame,
@@ -201,15 +208,6 @@ def write_features(
                 union_keys.append(k)
     key_col = {k: f"vt_{i}" for i, k in enumerate(union_keys)}
 
-    @F.pandas_udf("string")
-    def _tags_json(s):
-        pin_worker_zip_directories()
-        return s.map(
-            lambda t: json.dumps(
-                list(t) if t is not None else [], ensure_ascii=False
-            )
-        )
-
     def _vt(k: str):
         c = F.col("vtags").getItem(k)
         if k in _INT_VTAGS:
@@ -223,7 +221,8 @@ def write_features(
         (
             consolidated.select(
                 "ftype", "fid", "level", "minz", "maxz", "geom", "layer",
-                _tags_json(F.col("tags")).alias("tags_json"),
+                F.pandas_udf(_tags_json, "string")(F.col("tags"))
+                .alias("tags_json"),
                 *[_vt(k).alias(key_col[k]) for k in union_keys],
             )
             .write.mode("overwrite")

@@ -24,7 +24,6 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
-from map2db_spark.session import pin_worker_zip_directories
 from map2db_spark.sources.primitives import Cursor
 from map2db_spark.sources.tilemath import x_from_lon, y_from_lat
 
@@ -265,7 +264,6 @@ def build_manifest(
     debuginfo = header.debuginfo
 
     def expand(batches):
-        pin_worker_zip_directories()
         for pdf in batches:
             for r in pdf.itertuples(index=False):
                 yield _manifest_chunk_rows(

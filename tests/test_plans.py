@@ -2118,20 +2118,13 @@ def test_codegen_class_cache_sized_past_bench_working_set(spark):
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
 
 
-def test_consolidate_shuffle_keeps_every_partition(spark, tmp_path):
-    """consolidate's (ftype, fid) exchange has an explicit count, the
-    session's shuffle.partitions: without one, AQE coalesces a small
-    shuffle into one task, which put the whole union kernel on one
-    core."""
+def _consolidate_exchanges(spark, src):
+    """The (count, shuffle origin) of every (ftype, fid) exchange in
+    consolidate's plan, and the executed frame's partition count."""
     from map2db_spark.operators.consolidate import consolidate
     from map2db_spark.pipeline import load_features
     from map2db_spark.sources.header import read_header
-    from map2db_spark.sources.sample_maps import dbl_map
 
-    src = str(tmp_path / "dbl.map")
-    dbl_map().write(src)
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert n > 1
     cons = consolidate(load_features(spark, src), read_header(src))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -2140,5 +2133,42 @@ def test_consolidate_shuffle_keeps_every_partition(spark, tmp_path):
         r"hashpartitioning\(ftype#\d+, fid#\d+L?, (\d+)\), (\w+)",
         buf.getvalue(),
     )
-    assert exchanges == [(str(n), "REPARTITION_BY_NUM")], buf.getvalue()
-    assert cons.rdd.getNumPartitions() == n
+    return exchanges, cons.rdd.getNumPartitions()
+
+
+def test_consolidate_shuffle_keeps_every_partition(spark, tmp_path):
+    """consolidate's (ftype, fid) exchange has an explicit count, the
+    session's shuffle.partitions capped at the default parallelism:
+    without one, AQE coalesces a small shuffle into one task, which
+    put the whole union kernel on one core."""
+    from map2db_spark.sources.sample_maps import dbl_map
+
+    src = str(tmp_path / "dbl.map")
+    dbl_map().write(src)
+    n = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    assert n > 1
+    exchanges, parts = _consolidate_exchanges(spark, src)
+    assert exchanges == [(str(n), "REPARTITION_BY_NUM")]
+    assert parts == n
+
+
+def test_consolidate_shuffle_capped_at_default_parallelism(spark, tmp_path):
+    """A session left at Spark's default of 200 shuffle partitions runs
+    one consolidate task per core, not 200 short Python tasks."""
+    from map2db_spark.sources.sample_maps import dbl_map
+
+    src = str(tmp_path / "dbl.map")
+    dbl_map().write(src)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 200
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        exchanges, parts = _consolidate_exchanges(spark, src)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert exchanges == [(str(cores), "REPARTITION_BY_NUM")]
+    assert parts == cores

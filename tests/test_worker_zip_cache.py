@@ -1,6 +1,6 @@
-"""session.pin_worker_zip_directories: a Spark Python worker stops
-re-reading its zip archives' directories on every task, and the driver
-keeps the stdlib importer.
+"""session.pin_worker_zip_directories: a Spark Python worker that
+imports the package stops re-reading its zip archives' directories on
+every task, and the driver keeps the stdlib importer.
 
 Deterministic, no timing: the fix is visible as object identity (a
 re-read replaces each ``zipimporter``'s ``_files`` dict)."""
@@ -8,6 +8,8 @@ re-read replaces each ``zipimporter``'s ``_files`` dict)."""
 from __future__ import annotations
 
 import zipimport
+
+import map2db_spark
 
 PKG_ZIP = ".map2db_spark_pkg.zip"
 
@@ -21,9 +23,9 @@ def test_worker_keeps_zip_directories_and_still_imports(spark):
 
         import pandas as pd
 
-        from map2db_spark.session import pin_worker_zip_directories
-
-        pin_worker_zip_directories()
+        # the kernel refers to the package, as every pipeline kernel
+        # does, so the worker imports it while unpickling the kernel
+        version = map2db_spark.__version__
         zips = [
             v for v in sys.path_importer_cache.values()
             if isinstance(v, zipimport.zipimporter)
@@ -47,17 +49,20 @@ def test_worker_keeps_zip_directories_and_still_imports(spark):
             "kept": [kept],
             "origin": [spec.origin],
             "imported": [callable(mod.write_config)],
+            "version": [version],
         })
 
     rows = (
         spark.range(64).repartition(4)
-        .mapInPandas(kernel, "zips INT, kept BOOLEAN, origin STRING, imported BOOLEAN")
+        .mapInPandas(kernel, "zips INT, kept BOOLEAN, origin STRING, imported BOOLEAN, "
+                     "version STRING")
         .collect()
     )
     assert len(rows) == 4
     for r in rows:
         assert r.zips > 0 and r.kept, r
         assert PKG_ZIP in r.origin and r.imported, r
+        assert r.version == map2db_spark.__version__, r
 
 
 def test_driver_keeps_stdlib_zip_invalidation(spark, tmp_path):
