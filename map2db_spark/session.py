@@ -70,9 +70,9 @@ def pin_worker_zip_directories() -> None:
     A worker imports this module while it unpickles the first kernel
     that refers to the package, and pyspark sets the task context
     before it unpickles, so the call at the bottom of this module
-    covers every kernel.  Does nothing outside a Spark Python worker:
-    the driver rewrites the package zip in ``ship_package`` and keeps
-    the stdlib behaviour.  Idempotent; each worker's first task still
+    covers every kernel that refers to the package.  Does nothing
+    outside a Spark Python worker: the driver rewrites the package zip
+    in ``ship_package`` and keeps the stdlib behaviour.  Idempotent; each worker's first task still
     pays the re-read."""
     import zipimport
 
