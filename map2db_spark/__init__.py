@@ -9,10 +9,11 @@ re-expresses those semantics as a lazy Catalyst plan:
     tile manifest DataFrame  (driver parses the KB-scale header/index)
       -> mapInPandas decode kernel, clip + repair inside it
                                           (operators/decode.py, geometry/)
-      -> (ftype, fid) repartition + mapInPandas consolidation and
-         fragment union                   (operators/consolidate.py)
-      -> shuffle-free mapInPandas line merge (operators/linemerge.py)
-      -> sinks: parquet (canonical), SQLite + TOML (compat exports)
+      -> (ftype, fid) repartition + ONE mapInPandas: consolidation,
+         fragment union and line merge in the same task
+                      (operators/consolidate.py, operators/linemerge.py)
+      -> sinks: parquet (canonical, one write job for all three
+         tables), SQLite + TOML (compat exports)
 
 Beyond reference parity, `functions/` adds the large-scale
 training-data-pipeline operators (dedup, similarity search, text

@@ -22,9 +22,11 @@ aggregate:
   reduction a partial aggregate performs — so the exchange carries
   at most (groups x map tasks) narrow rows and nothing is globally
   sorted;
-- an inner null-safe join on the group key reattaches the extremum.
-  Every aggregated group has >= 1 base row, so the top-1 window emits
-  exactly one row per group and the join is row-preserving;
+- a LEFT null-safe join from the aggregated groups reattaches the
+  extremum.  The top-1 window emits at most one row per group, so the
+  join keeps every ``aggs`` row exactly once: a group with no ``base``
+  rows keeps its aggregates with a NULL extremum instead of silently
+  vanishing, and ``base`` groups absent from ``aggs`` are dropped;
   eqNullSafe keeps NULL group keys (groupBy treats NULL as a group,
   plain equality would drop it).
 
@@ -69,8 +71,9 @@ def attach_group_extremum(
     """Append per-group min (``ascending=True``) or max of ``value``
     to ``aggs`` (one row per group over ``group_cols``), computed from
     ``base`` via a WindowGroupLimit top-1 window instead of a string
-    aggregate.  ``aggs`` must carry ``group_cols``; ``base`` must be
-    the same row set the groups were aggregated from."""
+    aggregate.  ``aggs`` must carry ``group_cols``.  Every ``aggs``
+    row is kept (LEFT join): a group with no ``base`` row gets a NULL
+    extremum, as min()/max() over no values would give."""
     named, order = _ordered_value(value, alias, ascending)
     narrow = base.select(*group_cols, named)
     w = Window.partitionBy(*group_cols).orderBy(order)
@@ -86,7 +89,7 @@ def attach_group_extremum(
     for g in group_cols:
         clause = aggs[g].eqNullSafe(ext[renamed[g]])
         cond = clause if cond is None else cond & clause
-    return aggs.join(ext, cond).select(*aggs.columns, alias)
+    return aggs.join(ext, cond, "left").select(*aggs.columns, alias)
 
 
 def attach_global_extremum(

@@ -164,33 +164,14 @@ def make_consolidate_kernel(header: MapHeader):
     return consolidate_rows
 
 
-def consolidate(features, header: MapHeader):
-    """dbl-map consolidation: features DF -> one row per (ftype, fid).
+def consolidate_kernel(header: MapHeader, finish=None):
+    """The ``mapInPandas`` kernel behind ``consolidate``: a task's
+    sightings -> one row per (ftype, fid), with a pandas groupby inside
+    the kernel.  ``finish`` (frame -> frame), when given, runs on the
+    task's consolidated rows before they leave the task; the pipeline
+    merges its lines there (operators/linemerge.merge_line_geoms).
 
-    Execution shape: hash-repartition on the key, then ONE
-    ``mapInPandas`` per partition running a pandas groupby inside the
-    kernel.  This is deliberately NOT ``groupBy().applyInPandas`` —
-    that API pays per-group plan overhead (~ms), which at millions of
-    small feature groups dwarfs the actual work; batching the groups
-    through one Arrow stream makes the per-group cost microseconds.
-    Still exactly one shuffle on (ftype, fid).
-
-    Memory: a task materializes its partition's sightings in pandas.
-    The shuffle has an explicit count, spark.sql.shuffle.partitions
-    capped at the cluster's default parallelism: an explicit count is
-    a REPARTITION_BY_NUM shuffle, which AQE does not coalesce.  Without
-    a count AQE folds a small shuffle (a few MB of multi-tile
-    fragments) into ONE task, and the union is the CPU-heavy kernel:
-    on the stitch-zoom benchmark that put 2.0 s of unions on one core
-    of four.  The count is never above the one AQE starts from, and
-    the cap keeps a session left at Spark's default of 200 at one
-    task per core instead of 200 short Python tasks.
-
-    Returns the consolidated DataFrame with a ``violation`` column;
-    callers filter ``violation IS NULL`` for good rows and surface the
-    rest (the reference would have raised mid-run)."""
-    from typing import Iterator
-
+    Memory: a task materializes its partition's sightings in pandas."""
     kernel_one = make_consolidate_kernel(header)
 
     out_cols = [
@@ -243,21 +224,53 @@ def consolidate(features, header: MapHeader):
                 out.append(kernel_one(run))
         multi_out = pd.DataFrame(out, columns=out_cols)
         if len(singles) and len(multi_out):
-            yield pd.concat(
-                [singles[out_cols], multi_out], ignore_index=True
-            )
+            result = pd.concat([singles[out_cols], multi_out], ignore_index=True)
         elif len(singles):
-            yield singles[out_cols]
+            result = singles[out_cols]
         else:
-            yield multi_out
+            result = multi_out
+        yield result if finish is None else finish(result)
 
+    return kernel
+
+
+def by_feature(features):
+    """The one (ftype, fid) exchange consolidation runs above.
+
+    The shuffle has an explicit count, spark.sql.shuffle.partitions
+    capped at the cluster's default parallelism: an explicit count is
+    a REPARTITION_BY_NUM shuffle, which AQE does not coalesce.  Without
+    a count AQE folds a small shuffle (a few MB of multi-tile
+    fragments) into ONE task, and the union is the CPU-heavy kernel:
+    on the stitch-zoom benchmark that put 2.0 s of unions on one core
+    of four.  The count is never above the one AQE starts from, and
+    the cap keeps a session left at Spark's default of 200 at one
+    task per core instead of 200 short Python tasks."""
     spark = features.sparkSession
     n = min(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,
     )
-    parted = features.where("fid IS NOT NULL").repartition(n, "ftype", "fid")
-    return parted.mapInPandas(kernel, schema=CONSOLIDATED_SCHEMA)
+    return features.where("fid IS NOT NULL").repartition(n, "ftype", "fid")
+
+
+def consolidate(features, header: MapHeader):
+    """dbl-map consolidation: features DF -> one row per (ftype, fid).
+
+    Execution shape: hash-repartition on the key (``by_feature``), then
+    ONE ``mapInPandas`` per partition (``consolidate_kernel``).  This is
+    deliberately NOT ``groupBy().applyInPandas`` — that API pays
+    per-group plan overhead (~ms), which at millions of small feature
+    groups dwarfs the actual work; batching the groups through one
+    Arrow stream makes the per-group cost microseconds.  Still exactly
+    one shuffle on (ftype, fid).
+
+    Returns the consolidated DataFrame with a ``violation`` column;
+    callers filter ``violation IS NULL`` for good rows and surface the
+    rest (the reference would have raised mid-run)."""
+    return by_feature(features).mapInPandas(
+        consolidate_kernel(header), schema=CONSOLIDATED_SCHEMA
+    )
 
 
 def assign_ids(features, spark=None):

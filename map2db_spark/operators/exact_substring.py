@@ -10,11 +10,13 @@ it with a monolithic suffix array; the Spark-native decomposition used
 here is k-gram ANCHOR grouping:
 
   1. every character offset emits its length-L window's 128-bit
-     anchor (two independently-seeded xxhash64 longs — r16: one
+     anchor (two xxhash64 longs under different seeds — r16: one
      64-bit hash expects ~1e8 birthday collisions over a 100 TB
      corpus's ~1e14 windows, silently degrading the EXACT claim at
-     exactly the target scale) — one (h, h2, doc_id, offset) row per
-     position, O(total chars);
+     exactly the target scale; the seeded pair is the same mixer
+     twice, so its joint collision rate is expected, not proven, to
+     be near 2^-128) — one (h, h2, doc_id, offset) row per position,
+     O(total chars);
   2. ONE exchange clusters positions by anchor hash; a window count
      over the hash partition keeps exactly the positions whose anchor
      occurs at >= 2 places corpus-wide (r15, guide §2.4: this
@@ -100,7 +102,7 @@ def duplicate_spans(
         # text is consumed map-side here; only the 16-byte anchor
         # pair shuffles.  The anchor is an internal equality key —
         # any collision-free hash yields the IDENTICAL span output —
-        # and two independently-seeded xxhash64 longs (h, h2) are
+        # and two xxhash64 longs under different seeds (h, h2) are
         # still ~2.5x narrower than the 32-hex md5 string they
         # replace across the anchor-count Exchange, with a far
         # cheaper per-position hash (the pass is O(total chars)
@@ -109,9 +111,11 @@ def duplicate_spans(
         # expects ~1e8 birthday collisions, each minting a false
         # duplicate span — the declared EXACT semantics would
         # silently degrade to approximate exactly at the target
-        # scale.  The seeded pair drops the expected collision count
-        # to ~3e-11 over 1e14 windows (2^-128 pairwise), restoring
-        # the exactness claim at any reachable corpus size; output
+        # scale.  If the two seeds behaved as independent hashes the
+        # pair would drop the expected collision count to ~3e-11
+        # over 1e14 windows (2^-128 per pair).  h2 is the same mixer
+        # as h with another seed, so the hashes are not independent
+        # and that bound is an expectation, not a proof; output
         # equality is pinned against the md5 form in
         # tests/test_exact_substring.py and the DuckDB oracle (which
         # keeps md5) at sf0.001/0.01/0.1.

@@ -2,10 +2,18 @@
 
 The reference loops ``SELECT ... WHERE m2db_lnum = ?`` over the whole
 id range on one thread.  Here the same per-feature algorithm
-(geometry/linemerge.py) runs inside a shuffle-free ``mapInPandas`` —
-but only for features that need it: a part-count probe on the WKB
-header (a pure column expression) splits off the single-part lines, so
-at scale the merge kernel sees only the multi-part minority.
+(geometry/linemerge.py, wrapped as ``merge_line_wkb``) runs on
+executors, and only for the features that need it: those whose WKB
+header says more than one part.
+
+Two callers share that helper.  ``merge_lines`` is the standalone
+operator: a shuffle-free ``mapInPandas`` over consolidated line rows,
+with a part-count probe on the WKB header (a pure column expression)
+that splits off the single-part lines, and the reference's merge-stat
+columns on its output.  The pipeline (pipeline._final_features) merges
+inside the consolidate task instead: ``merge_line_geoms`` runs on each
+task's consolidated rows, so a dbl conversion pays one Python stage,
+not two, and no branch split or union.
 """
 
 from __future__ import annotations
@@ -19,6 +27,7 @@ from pyspark.sql.functions import pandas_udf
 
 from map2db_spark.geometry import wkb as gwkb
 from map2db_spark.geometry.linemerge import merge_feature
+from map2db_spark.geometry.normalize import normalize_multilinestring
 
 MERGE_STATS_COLS = [
     "was_multi",
@@ -66,22 +75,47 @@ def wkb_nparts_expr(col) -> F.Column:
     )
 
 
+def wkb_part_count(b) -> int:
+    """Part count from a WKB header (u32 at offset 5 for multi types;
+    1 for single geometries, 0 for NULL) — no full decode."""
+    if b is None:
+        return 0
+    gtype = struct.unpack_from("<I", b, 1)[0] & 0xFF
+    if gtype in (4, 5, 6):
+        return struct.unpack_from("<I", b, 5)[0]
+    return 1
+
+
 @pandas_udf(IntegerType())
 def wkb_nparts(geom: pd.Series) -> pd.Series:
-    """Part count from the WKB header (u32 at offset 5 for multi types;
-    1 for single geometries) — no full decode.  Kept as the reference
+    """``wkb_part_count`` as a pandas UDF.  Kept as the reference
     implementation for the expression twin above (parity-pinned);
     query paths use wkb_nparts_expr."""
+    return geom.map(wkb_part_count)
 
-    def nparts(b):
-        if b is None:
-            return 0
-        gtype = struct.unpack_from("<I", b, 1)[0] & 0xFF
-        if gtype in (4, 5, 6):
-            return struct.unpack_from("<I", b, 5)[0]
-        return 1
 
-    return geom.map(nparts)
+def merge_line_wkb(geom: bytes) -> tuple[bytes, dict]:
+    """One line feature's merge: (geometry, merge stats).  The geometry
+    is replaced, normalized, only when the merge improved it (the
+    reference updates only on improvement, map2db.py:1163-1171)."""
+    _, parts = gwkb.decode(geom)
+    merged, stats = merge_feature(parts)
+    if stats["improved"]:
+        geom = gwkb.encode_multilinestring(normalize_multilinestring(merged))
+    return geom, stats
+
+
+def merge_line_geoms(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Consolidated rows of any ftype -> the same rows with every
+    multi-part line merged: exactly the rows ``merge_lines``' probe
+    sends to its kernel (ftype 'line', more than one WKB part,
+    violation rows included), with the same geometry result."""
+    todo = pdf["ftype"].eq("line") & pdf["geom"].map(wkb_part_count).gt(1)
+    if not todo.any():
+        return pdf
+    geoms = pdf["geom"].copy()
+    geoms[todo] = geoms[todo].map(lambda g: merge_line_wkb(g)[0])
+    return pdf.assign(geom=geoms)
 
 
 def merge_lines(lines: DataFrame) -> DataFrame:
@@ -110,17 +144,10 @@ def merge_lines(lines: DataFrame) -> DataFrame:
     cols = lines.columns
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from map2db_spark.geometry.normalize import normalize_multilinestring
-
         for pdf in batches:
             rows = []
             for r in pdf.to_dict("records"):
-                kind, parts = gwkb.decode(r["geom"])
-                merged, stats = merge_feature(parts)
-                if stats["improved"]:
-                    r["geom"] = gwkb.encode_multilinestring(
-                        normalize_multilinestring(merged)
-                    )
+                r["geom"], stats = merge_line_wkb(r["geom"])
                 for k in MERGE_STATS_COLS:
                     r[k] = bool(stats[k])
                 rows.append(r)

@@ -5,14 +5,20 @@ Spark-first restatement of the reference's ``map2db(src, dst)``
 
 driver:    header + tile index parse (KB-scale)            [sources/header]
 executors: manifest -> mapInPandas decode + geometry prep  [operators/decode]
-           (ftype, fid) shuffle + consolidation (dbl)      [operators/consolidate]
-           shuffle-free mapInPandas line merge (dbl)       [operators/linemerge]
-executors: parquet sink (the default)                      [sinks/parquet_sink]
+           (ftype, fid) shuffle, then ONE mapInPandas that
+           consolidates and merges lines (dbl)             [operators/consolidate,
+                                                            operators/linemerge]
+executors: parquet sink (the default), one write job       [sinks/parquet_sink]
 driver:    SQLite export sink + TOML config                [sinks/]
 
-The plan is lazy end to end; the only driver-side data movements are
-the collected vtag key set (tiny) and the Arrow batches streamed into
-the SQLite file.
+The plan is lazy end to end and checkpoints nothing; the only
+driver-side data movements are the collected vtag key set (tiny), the
+parquet footers' row counts and the Arrow batches streamed into the
+SQLite file.  A parquet conversion of the dbl fixture runs 7 Spark
+jobs (AQE submits one per shuffle stage): the vtag key order's
+collect, which decodes into the feature cache, and the one write over
+the (ftype, fid) and (ftype, level) exchanges
+(tests/test_plans.py::test_dbl_parquet_conversion_job_budget).
 """
 
 from __future__ import annotations
@@ -20,11 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map2db_spark.operators.consolidate import assign_ids, consolidate
+from map2db_spark.operators.consolidate import (
+    CONSOLIDATED_SCHEMA,
+    assign_ids,
+    by_feature,
+    consolidate_kernel,
+)
 from map2db_spark.operators.decode import decode_features
-from map2db_spark.operators.linemerge import merge_lines
+from map2db_spark.operators.linemerge import merge_line_geoms
 from map2db_spark.sinks.sqlite_sink import (
-    TABLE_FOR_FTYPE,
     readme_license,
     vtag_key_order,
     write_sqlite,
@@ -60,6 +70,16 @@ def load_features(spark: SparkSession, src: str, header: MapHeader | None = None
     return decode_features(spark, src, header, manifest)
 
 
+def _consolidate_and_merge(feats: DataFrame, header: MapHeader) -> DataFrame:
+    """consolidate + line merge as ONE Python stage: the (ftype, fid)
+    exchange, then the consolidate kernel with every multi-part line
+    merged before its rows leave the task.  Same rows as
+    ``merge_lines`` over ``consolidate``'s lines unioned with its other
+    rows, minus the merge-stat columns (tests/test_pipeline_e2e.py)."""
+    kernel = consolidate_kernel(header, finish=merge_line_geoms)
+    return by_feature(feats).mapInPandas(kernel, schema=CONSOLIDATED_SCHEMA)
+
+
 def _final_features(feats: DataFrame, header: MapHeader) -> DataFrame:
     """Reject-free decoded features -> final feature rows (dbl:
     consolidated + line-merged; non-dbl: deterministically numbered
@@ -69,15 +89,7 @@ def _final_features(feats: DataFrame, header: MapHeader) -> DataFrame:
             "ftype", "fid", "level", "minz", "maxz", "layer", "tags", "vtags", "geom",
             F.lit(None).cast("string").alias("violation"),
         )
-    # materialize once before branching: the line/non-line split would
-    # otherwise re-execute decode + consolidate per branch (measured
-    # 2x the pipeline cost at 5.2M features)
-    cons = consolidate(feats, header).localCheckpoint()
-    lines = cons.where(F.col("ftype") == "line")
-    merged = merge_lines(lines).drop(
-        "was_multi", "still_multi_after_merge", "still_multi_after_snap", "has_loop"
-    )
-    return cons.where(F.col("ftype") != "line").unionByName(merged)
+    return _consolidate_and_merge(feats, header)
 
 
 def consolidated_features(
@@ -116,13 +128,18 @@ def map2db(
 
     Both sinks consume the identical ``final`` DataFrame — agreement
     is pinned table-by-table in tests/test_pipeline_e2e.py
-    (test_sink_parity_parquet_vs_sqlite).  For dbl maps both write the
-    forgemap TOML config next to the output.  Returns a summary dict
-    with counts/license/vtag_cols (+ paths for parquet).
+    (test_sink_parity_parquet_vs_sqlite).  For dbl maps ``final`` is
+    one Python stage over the (ftype, fid) exchange that consolidates
+    and line-merges (``_final_features``).  The parquet sink writes
+    it once, and the counts come from the written files' parquet
+    footers, so nothing is checkpointed or counted by a second job.
+    For dbl maps both sinks write the forgemap TOML config next to the
+    output.  Returns a summary dict with counts/license/vtag_cols
+    (+ paths for parquet).
 
-    The run releases every RDD it persisted or checkpointed (any RDD
-    that became persistent during the call), so repeated conversions
-    in one application do not accumulate cached blocks."""
+    The run releases every RDD it persisted (any RDD that became
+    persistent during the call), so repeated conversions in one
+    application do not accumulate cached blocks."""
     if sink not in ("parquet", "sqlite"):
         raise ValueError(f"sink must be 'parquet' or 'sqlite', got {sink!r}")
     persistent = spark.sparkContext._jsc.getPersistentRDDs
@@ -141,31 +158,18 @@ def map2db(
                 out_pathname, src_pathname, header, final, feats
             )
         else:
-            from map2db_spark.sinks.parquet_sink import write_manifest, write_parquet
+            from map2db_spark.sinks.parquet_sink import (
+                table_row_counts,
+                write_manifest,
+                write_parquet,
+            )
 
             vtag_cols = vtag_key_order(feats)
-            # avoid re-running the merge branch once per table: the
-            # three per-ftype filtered writes below share this plan
-            final = final.localCheckpoint()
             paths = write_parquet(final, out_pathname)
             manifest = write_manifest(
                 out_pathname, src_pathname, header, vtag_cols
             )
-            # counts from the checkpointed `final`, not a re-read of the
-            # written datasets: an ftype with zero rows writes a dataset
-            # with no part files, and a schema-less read would raise
-            # AnalysisException where the sqlite sink reports 0
-            # (ADVICE r7)
-            by_ftype = {
-                row["ftype"]: row["n"]
-                for row in final.groupBy("ftype")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            counts = {
-                table: int(by_ftype.get(ftype, 0))
-                for ftype, table in TABLE_FOR_FTYPE.items()
-            }
+            counts = table_row_counts(paths)
             result = {
                 "counts": counts,
                 "license": readme_license(header, src_pathname)[1],

@@ -4,10 +4,17 @@ tables live as partitioned parquet).
 
 Layout: one dataset per feature table, partitioned by level (query
 pattern: "features visible at zoom z" prunes whole level partitions),
-plus a ``manifest.json`` sidecar carrying the same provenance the
-SQLite sink records in its README/limits/subfiles tables (license
-text, bbox, subfile zoom ranges, per-table vtag column order) so a
-consumer of either sink sees identical metadata.
+with one part file per (table, level), plus a ``manifest.json``
+sidecar carrying the same provenance the SQLite sink records in its
+README/limits/subfiles tables (license text, bbox, subfile zoom
+ranges, per-table vtag column order) so a consumer of either sink
+sees identical metadata.
+
+One Spark job writes all three tables (``write_parquet``: a staging
+write, then a rename per table); three filtered writes would each
+re-run the upstream plan, or need it checkpointed, and pay their own
+exchange.  Row counts come from the part files' parquet footers
+(``table_row_counts``), not a count job.
 
 Geometry stays a WKB binary column — GeoParquet-compatible column
 layout (geometry column + metadata is a follow-up; readers that only
@@ -17,28 +24,70 @@ pruning).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
 from map2db_spark.sinks.sqlite_sink import TABLE_FOR_FTYPE, provenance
 
+# under out_dir; the leading underscore hides it from Spark's and
+# pyarrow's dataset listing while a write is in flight
+STAGING_DIR = "_staging"
+
 
 def write_parquet(consolidated: DataFrame, out_dir: str) -> dict[str, str]:
+    """Write the three feature tables in ONE Spark job and return
+    {table: path}.
+
+    The job writes ``consolidated`` partitioned by (ftype, level) into
+    a staging directory under ``out_dir``; each ``ftype=<f>`` directory
+    is then renamed to its table directory.  A table directory that
+    already exists is replaced (mode "overwrite"), an ftype with no
+    rows gets an empty table directory, and every table directory gets
+    a ``_SUCCESS`` marker.  The repartition keys equal the partition
+    keys, so each (table, level) directory holds exactly one part file.
+    The rename is a local-filesystem move, like write_manifest's
+    open()."""
+    staging = os.path.join(out_dir, STAGING_DIR)
+    (
+        consolidated.repartition("ftype", "level")
+        .write.mode("overwrite")
+        .partitionBy("ftype", "level")
+        .parquet(staging)
+    )
     paths = {}
     for ftype, table in TABLE_FOR_FTYPE.items():
         path = os.path.join(out_dir, table)
-        (
-            consolidated.where(consolidated.ftype == ftype)
-            .drop("ftype")
-            .repartition("level")
-            .write.mode("overwrite")
-            .partitionBy("level")
-            .parquet(path)
-        )
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        written = os.path.join(staging, f"ftype={ftype}")
+        if os.path.isdir(written):
+            os.rename(written, path)
+        else:
+            os.makedirs(path)
+        open(os.path.join(path, "_SUCCESS"), "wb").close()
         paths[table] = path
+    shutil.rmtree(staging)
     return paths
+
+
+def table_row_counts(paths: dict[str, str]) -> dict[str, int]:
+    """Rows per table, read from the footers of the part files
+    ``write_parquet`` wrote: no Spark job.  A table with no part
+    files counts 0, as the sqlite sink reports it (ADVICE r7: a
+    schema-less spark.read.parquet of such a table raises)."""
+    import pyarrow.parquet as pq
+
+    return {
+        table: sum(
+            pq.read_metadata(part).num_rows
+            for part in glob.glob(os.path.join(path, "level=*", "*.parquet"))
+        )
+        for table, path in paths.items()
+    }
 
 
 def write_manifest(

@@ -1175,6 +1175,26 @@ def test_extrema_attach_matches_string_min_max(spark):
     assert got_max == want_max
 
 
+def test_extrema_group_missing_from_base_keeps_its_row(spark):
+    """attach_group_extremum LEFT-joins from ``aggs``: a group with no
+    ``base`` row keeps its aggregates with a NULL extremum (an inner
+    join dropped the row silently), and a ``base`` group missing from
+    ``aggs`` adds no row."""
+    from map2db_spark.functions.extrema import attach_group_extremum
+
+    base = spark.createDataFrame(
+        [("a", "m2"), ("a", "m1"), (None, "z1"), ("x", "q")], "g STRING, v STRING"
+    )
+    aggs = spark.createDataFrame(
+        [("a", 2), (None, 1), ("gone", 5)], "g STRING, n LONG"
+    )
+    got = sorted(
+        (tuple(r) for r in attach_group_extremum(aggs, base, ["g"], "v", "m").collect()),
+        key=repr,
+    )
+    assert got == sorted([("a", 2, "m1"), (None, 1, "z1"), ("gone", 5, None)], key=repr)
+
+
 def test_extrema_global_empty_input_keeps_one_row(spark):
     """r16: the global form must keep min()'s one-row (count=0,
     NULL) output on EMPTY input — the degenerate-input gate class; an

@@ -404,10 +404,15 @@ def test_parquet_sink_level_partition_pruning(spark, dbl_path, tmp_path_factory)
 
 def test_parquet_sink_zero_row_ftype(spark, tmp_path):
     """A map where an ftype has zero rows must not crash the parquet
-    sink's count step: a zero-row ftype writes a dataset with no part
+    sink's count step: a zero-row ftype writes a table with no part
     files, and a schema-less spark.read.parquet of it raises
-    AnalysisException — counts now come from the checkpointed `final`
-    DataFrame, reporting 0 like the sqlite sink does (ADVICE r7)."""
+    AnalysisException — counts come from the written part files'
+    footers, reporting 0 like the sqlite sink does (ADVICE r7).  The
+    empty tables still exist, each with its _SUCCESS marker, and the
+    sink's staging directory is gone."""
+    import os
+
+    from map2db_spark.sinks.parquet_sink import STAGING_DIR
     from map2db_spark.sources.fixture import MapWriter, Poi
     from map2db_spark.sources.sample_maps import BBOX
 
@@ -418,13 +423,145 @@ def test_parquet_sink_zero_row_ftype(spark, tmp_path):
     out = str(tmp_path / "points_only_pq")
     result = map2db(spark, src, out, sink="parquet")
     assert result["counts"] == {"points": 1, "lines": 0, "areas": 0}
+    for table in ("points", "lines", "areas"):
+        assert os.path.isfile(os.path.join(out, table, "_SUCCESS")), table
+    assert os.listdir(os.path.join(out, "lines")) == ["_SUCCESS"]
+    assert os.listdir(os.path.join(out, "areas")) == ["_SUCCESS"]
+    assert not os.path.exists(os.path.join(out, STAGING_DIR))
+
+
+def test_parquet_sink_rewrite_keeps_one_generation(spark, dbl_path, tmp_path):
+    """Converting twice into the same directory replaces each table
+    (mode "overwrite"): one part file per (table, level), not two."""
+    import glob
+    import os
+
+    out = str(tmp_path / "twice")
+    first = map2db(spark, dbl_path, out)
+    second = map2db(spark, dbl_path, out)
+    assert second["counts"] == first["counts"] == {"points": 3, "lines": 4, "areas": 2}
+    for table in ("points", "lines", "areas"):
+        levels = sorted(os.listdir(os.path.join(out, table)))
+        assert "_SUCCESS" in levels
+        level_dirs = [d for d in levels if d.startswith("level=")]
+        assert level_dirs, table
+        for d in level_dirs:
+            parts = glob.glob(os.path.join(out, table, d, "*.parquet"))
+            assert len(parts) == 1, (table, d, parts)
+    assert spark.read.parquet(os.path.join(out, "lines")).count() == 4
+
+
+def _stitch_line_map(seed: int):
+    """Seeded two-subfile map whose roads cross the z8 tile edges
+    (lon 1.40625, lat ~1.4069) and are encoded unclipped into every
+    tile they touch at both levels, so consolidation unions clipped
+    pieces and the merge has joints to stitch.  It also carries a
+    single-sighting line made of two touching parts, and a multi-part
+    cross-tile road with a zoom gap (a violation row)."""
+    import random
+
+    from map2db_spark.sources.fixture import MapWriter, Poi, Way
+    from map2db_spark.sources.sample_maps import BBOX
+    from map2db_spark.sources.tilemath import x_from_lon, y_from_lat
+
+    rng = random.Random(seed)
+    w = MapWriter(BBOX, [(6, 0, 7), (8, 8, 11)], dbl_license="L")
+
+    def z8_tiles(pts):
+        xs = {int(x_from_lon(8, lon)) for lon, _ in pts}
+        ys = {int(y_from_lat(8, lat)) for _, lat in pts}
+        return [(x, y) for x in range(min(xs), max(xs) + 1)
+                for y in range(min(ys), max(ys) + 1)]
+
+    def place(blocks, fid, z8_zoom, **attrs):
+        pts = [p for block in blocks for part in block for p in part]
+        for tx, ty in z8_tiles(pts):
+            w.add_way(1, tx, ty, Way(blocks=blocks, zoom=z8_zoom, lnum=fid, **attrs))
+        w.add_way(0, 32, 31, Way(blocks=blocks, zoom=7, lnum=fid, **attrs))
+
+    def walk():
+        pts = [(round(rng.uniform(1.0, 1.8), 6), round(rng.uniform(1.0, 1.8), 6))]
+        for _ in range(rng.randint(2, 5)):
+            lon, lat = pts[-1]
+            pts.append((round(min(1.95, max(0.15, lon + rng.uniform(-0.3, 0.3))), 6),
+                        round(min(1.95, max(0.15, lat + rng.uniform(-0.3, 0.3))), 6)))
+        return pts
+
+    for fid in range(24):
+        a = walk()
+        blocks = [[a]] if fid % 3 else [[a], [walk()]]
+        place(blocks, fid, 8, tags=(f"highway=h{fid % 4}",))
+    # zoom gap: minz 9 at level 8, but the level-6 subfile tops out at 7
+    cross = [(1.2, 0.5), (1.6, 0.5)]
+    bend = [(1.6, 0.5), (1.6, 0.7)]
+    place([[cross], [bend]], 100, 9)
+    # one sighting, two parts that share an end point
+    w.add_way(1, 128, 127, Way(
+        blocks=[[[(0.2, 0.2), (0.4, 0.2)]], [[(0.4, 0.2), (0.4, 0.4)]]],
+        zoom=8, lnum=101))
+    w.add_poi(1, 128, 127, Poi(lat=0.7, lon=0.7, zoom=8, pnum=1))
+    return w
+
+
+@pytest.mark.parametrize("fixture", ["dbl", "stitch"])
+def test_fused_merge_matches_merge_lines(spark, dbl_path, tmp_path, fixture):
+    """The pipeline merges lines inside the consolidate task; its rows
+    must equal the standalone operators composed — merge_lines over
+    consolidate's lines, unioned with consolidate's other rows, stat
+    columns dropped — row for row, including single-sighting
+    multi-part lines and violation rows."""
+    from pyspark.sql import functions as F
+
+    from map2db_spark.operators.consolidate import consolidate
+    from map2db_spark.operators.linemerge import (
+        MERGE_STATS_COLS,
+        merge_lines,
+        wkb_nparts_expr,
+    )
+    from map2db_spark.pipeline import _final_features, load_features
+    from map2db_spark.sources.header import read_header
+
+    if fixture == "dbl":
+        src = dbl_path
+    else:
+        src = str(tmp_path / "stitch.map")
+        _stitch_line_map(7).write(src)
+    header = read_header(src)
+    feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
+
+    def rows(df):
+        return sorted(
+            (r["ftype"], r["fid"], r["level"], r["minz"], r["maxz"], r["layer"],
+             tuple(r["tags"]), tuple(sorted((r["vtags"] or {}).items())),
+             bytes(r["geom"]), r["violation"])
+            for r in df.collect()
+        )
+
+    cons = consolidate(feats, header)
+    composed = cons.where(F.col("ftype") != "line").unionByName(
+        merge_lines(cons.where(F.col("ftype") == "line")).drop(*MERGE_STATS_COLS)
+    )
+    fused = rows(_final_features(feats, header))
+    assert fused == rows(composed)
+
+    # the cases the merge must not skip are present, and it did work
+    sightings = feats.where("ftype = 'line'").groupBy("fid").count()
+    lines = cons.where("ftype = 'line'").withColumn("n", wkb_nparts_expr(F.col("geom")))
+    single_multi = lines.join(sightings.where("count = 1"), "fid").where("n > 1")
+    assert single_multi.count() >= 1
+    unmerged = {(r[0], r[1]): r[8] for r in rows(cons)}
+    changed = [r for r in fused if r[0] == "line" and r[8] != unmerged[(r[0], r[1])]]
+    assert changed
+    assert any(r[9] is not None for r in fused)
+    if fixture == "stitch":
+        assert any(r[1] == 100 and r[9] is not None for r in changed)
+        assert any(r[1] == 101 for r in changed)
 
 
 @pytest.mark.parametrize("sink", ["parquet", "sqlite"])
 def test_map2db_releases_persistent_rdds(spark, dbl_path, tmp_path, sink):
-    """map2db() persists the decoded features and local-checkpoints
-    the consolidated (and, for parquet, the final) frame; none of them
-    may outlive the call."""
+    """map2db() persists the decoded features (they feed the vtag key
+    order and the sink); nothing it persisted may outlive the call."""
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persistent().keys())
     out = str(tmp_path / ("out.db" if sink == "sqlite" else "out"))

@@ -2172,3 +2172,65 @@ def test_consolidate_shuffle_capped_at_default_parallelism(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert exchanges == [(str(cores), "REPARTITION_BY_NUM")]
     assert parts == cores
+
+
+def test_dbl_parquet_conversion_job_budget(spark, tmp_path):
+    """A parquet map2db() of a dbl map is one pass: the decode that
+    fills the feature cache (for the vtag key order), the (ftype, fid)
+    exchange, one consolidate-and-merge Python stage and one write of
+    all three tables.  At most 7 Spark jobs, counted with the status
+    tracker around the call, and none of them a localCheckpoint (the
+    former shape ran 15, two of them checkpoints)."""
+    from map2db_spark.pipeline import map2db
+    from map2db_spark.sources.sample_maps import dbl_map
+
+    src = str(tmp_path / "dbl.map")
+    dbl_map().write(src)
+    sc = spark.sparkContext
+    group = "dbl-parquet-job-budget"
+    sc.setJobGroup(group, "dbl parquet conversion")
+    try:
+        map2db(spark, src, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 7, sorted(jobs)
+    stages = [
+        tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert stages and all(s is not None for s in stages)
+    names = [s.name for s in stages]
+    assert not any(n.startswith("localCheckpoint") for n in names), names
+
+
+def test_dbl_final_features_one_python_stage(spark, tmp_path):
+    """The dbl final frame runs ONE MapInPandas above the (ftype, fid)
+    REPARTITION_BY_NUM exchange — consolidation and the line merge
+    share the task — and no line/non-line branch union."""
+    from pyspark.sql import functions as F
+
+    from map2db_spark.pipeline import _final_features, load_features
+    from map2db_spark.sources.header import read_header
+    from map2db_spark.sources.sample_maps import dbl_map
+
+    src = str(tmp_path / "dbl.map")
+    dbl_map().write(src)
+    header = read_header(src)
+    feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        _final_features(feats, header).explain()
+    lines = buf.getvalue().splitlines()
+    exchanges = [
+        i for i, ln in enumerate(lines)
+        if re.search(
+            r"Exchange hashpartitioning\(ftype#\d+, fid#\d+L?, \d+\), REPARTITION_BY_NUM",
+            ln,
+        )
+    ]
+    assert len(exchanges) == 1, lines
+    above = lines[: exchanges[0]]
+    assert sum("MapInPandas" in ln for ln in above) == 1, lines
+    assert not any("Union" in ln for ln in lines), lines
