@@ -24,9 +24,14 @@ associative, so partial ordering of fragments is irrelevant
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from map2db_spark.geometry import wkb as gwkb
 from map2db_spark.geometry.union import (
@@ -273,7 +278,166 @@ def consolidate(features, header: MapHeader):
     )
 
 
-def assign_ids(features, spark=None):
+# One row per (ftype, tile) of unnumbered features (n = row count, seq =
+# the largest intra-tile ordinal) or per (ftype, key) first sighting
+# (level, tile, seq, pos of the earliest row carrying the key, n null).
+SUMMARY_SCHEMA = (
+    "ftype STRING, level INT, tile_y INT, tile_x INT, seq INT, pos INT, "
+    "n LONG, key STRING"
+)
+_SUMMARY_ARROW = pa.schema([
+    ("ftype", pa.string()), ("level", pa.int32()), ("tile_y", pa.int32()),
+    ("tile_x", pa.int32()), ("seq", pa.int32()), ("pos", pa.int32()),
+    ("n", pa.int64()), ("key", pa.string()),
+])
+_TILE = ["ftype", "level", "tile_y", "tile_x"]
+_TRAVERSAL = ["neg_level", "tile_y", "tile_x", "seq", "pos"]
+
+
+def _first_sightings(frame: pd.DataFrame) -> pd.DataFrame:
+    """The earliest sighting per (ftype, key) in traversal order, rows
+    sorted by (first sighting, key)."""
+    return frame.sort_values(_TRAVERSAL + ["key"], kind="mergesort").drop_duplicates(
+        ["ftype", "key"]
+    )
+
+
+def summary_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The ``mapInArrow`` kernel behind ``traversal_summary``: a task's
+    features -> its per-tile counts of unnumbered rows and the first
+    sighting of every (ftype, variable-tag key)."""
+    tiles, firsts = [], []
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        cols = {
+            c: rb.column(c).to_numpy(zero_copy_only=False)
+            for c in ["ftype", "level", "tile_y", "tile_x", "seq"]
+        }
+        unnumbered = pa.Table.from_batches([rb.select(_TILE + ["seq"])]).filter(
+            rb.column("fid").is_null()
+        )
+        tiles.append(
+            unnumbered.group_by(_TILE).aggregate([("seq", "count"), ("seq", "max")])
+        )
+        vtags = rb.column("vtags")
+        # parent row and in-map position of every entry, from the
+        # offsets (pc.list_parent_indices on a MapArray aborts the
+        # worker in pyarrow 16; ``keys`` ignores slicing and null rows)
+        offs = vtags.offsets.to_numpy()
+        lens = np.diff(offs)
+        if vtags.null_count:
+            lens[vtags.is_null().to_numpy(zero_copy_only=False)] = 0
+        if not lens.sum():
+            continue
+        parent = np.repeat(np.arange(len(lens)), lens)
+        pos = np.arange(len(parent)) - np.repeat(np.cumsum(lens) - lens, lens)
+        keys = vtags.keys.to_numpy(zero_copy_only=False)
+        frame = pd.DataFrame({
+            "ftype": cols["ftype"][parent],
+            "key": keys[offs[:-1][parent] + pos],
+            "neg_level": -cols["level"][parent],
+            "tile_y": cols["tile_y"][parent],
+            "tile_x": cols["tile_x"][parent],
+            "seq": cols["seq"][parent],
+            "pos": pos,
+        })
+        firsts.append(_first_sightings(frame))
+    out = []
+    if tiles:
+        t = pa.concat_tables(tiles).to_pandas()
+        out.append(pd.DataFrame({
+            **{c: t[c] for c in _TILE},
+            "seq": t["seq_max"], "n": t["seq_count"],
+        }))
+    if firsts:
+        f = _first_sightings(pd.concat(firsts, ignore_index=True))
+        out.append(pd.DataFrame({
+            "ftype": f["ftype"], "level": -f["neg_level"], "tile_y": f["tile_y"],
+            "tile_x": f["tile_x"], "seq": f["seq"], "pos": f["pos"], "key": f["key"],
+        }))
+    if out:
+        yield pa.RecordBatch.from_pandas(
+            pd.concat(out, ignore_index=True).reindex(columns=_SUMMARY_ARROW.names),
+            schema=_SUMMARY_ARROW, preserve_index=False,
+        )
+
+
+
+@dataclass(frozen=True)
+class TraversalSummary:
+    """What one pass over the decoded features tells the driver.
+
+    ``vtag_order``: per feature table, the variable-tag keys in
+    first-sighting order (the reference's column-creation order,
+    map2db.py:857-871).  ``tiles``: per (ftype, tile) the count ``n``
+    of unnumbered rows, the largest ``seq`` among them, and ``off``, the
+    id of the tile's first row: the running count in reference
+    traversal order (level desc, tile_y, tile_x).  ``totals``: the
+    unnumbered rows per ftype."""
+
+    vtag_order: dict
+    tiles: pd.DataFrame
+    totals: dict
+
+    def offsets(self, spark) -> DataFrame:
+        """The per-tile id offsets as a small local DataFrame to
+        broadcast (built from Arrow: a local scan, no Python worker).
+        Raises where a tile's unnumbered rows do not own the dense
+        ordinals 0..n-1, which ``off + seq`` needs."""
+        t = self.tiles
+        bad = t[t["seq"] != t["n"] - 1]
+        if len(bad):
+            raise ValueError(
+                "per-tile sequence numbers are not dense over the rows"
+                f" without ids: {bad.head(3).to_dict('records')}"
+            )
+        return spark.createDataFrame(pa.Table.from_pandas(
+            t[_TILE + ["off"]],
+            schema=pa.schema([
+                ("ftype", pa.string()), ("level", pa.int32()),
+                ("tile_y", pa.int32()), ("tile_x", pa.int32()),
+                ("off", pa.int64()),
+            ]),
+            preserve_index=False,
+        ))
+
+
+def traversal_summary(features: DataFrame) -> TraversalSummary:
+    """One ``mapInArrow`` pass over decoded features (``summary_kernel``)
+    and a small driver-side reduction of its rows: at most 3 per
+    non-empty tile plus 3 per distinct key per task.  In ``map2db`` it
+    is the first action over the persisted features, so it is the job
+    that decodes them into the cache.  It reads no row data through an
+    exchange."""
+    got = (
+        features.select("ftype", "fid", "level", "tile_y", "tile_x", "seq", "vtags")
+        .mapInArrow(summary_kernel, SUMMARY_SCHEMA)
+        .toArrow()
+        .to_pandas()
+    )
+    is_tile = got["key"].isna()
+    tiles = (
+        got[is_tile]
+        .groupby(_TILE, as_index=False)
+        .agg(n=("n", "sum"), seq=("seq", "max"))
+        .sort_values(["ftype", "level", "tile_y", "tile_x"],
+                     ascending=[True, False, True, True], kind="mergesort")
+        .reset_index(drop=True)
+    )
+    tiles["n"] = tiles["n"].astype("int64")
+    tiles["off"] = tiles.groupby("ftype")["n"].cumsum() - tiles["n"]
+    keys = got[~is_tile].assign(neg_level=lambda d: -d["level"])
+    firsts = _first_sightings(keys)
+    vtag_order = {
+        ftype: firsts.loc[firsts["ftype"] == ftype, "key"].tolist()
+        for ftype in ["point", "line", "area"]
+    }
+    totals = tiles.groupby("ftype")["n"].sum().astype(int).to_dict()
+    return TraversalSummary(vtag_order, tiles, totals)
+
+
+def assign_ids(features, offsets=None):
     """Non-dbl path (A5, map2db.py:842-843, 1454): deterministic
     sequential ids per feature table in reference traversal order
     (subfile level desc, then row-major tile sweep, then intra-tile
@@ -283,18 +447,21 @@ def assign_ids(features, spark=None):
     *after* its counter ticked; this renumbering is compact — a
     documented, permissible divergence (SURVEY §7 hard part 4).
 
-    Scale note: row_number over a per-ftype window is a single
-    reducer per ftype; for planet-scale non-dbl maps switch to the
-    two-pass partition-offset assigner (same ordering, no global
-    sort): see operators/ids.py.
+    Offsets, not a sort: every tile is decoded by one task, and the
+    decoder's ``seq`` is the dense per-ftype ordinal of the rows it
+    emits from a tile (operators/decode.tile_feature_rows), so the id is
+    the tile's offset (``TraversalSummary.offsets``: the running row
+    count of the tiles before it in traversal order) plus ``seq``.  That
+    equals ``row_number() OVER (PARTITION BY ftype ORDER BY level DESC,
+    tile_y, tile_x, seq) - 1`` exactly, and it is a broadcast join on the
+    tile key: no window and no exchange of row data, where the window
+    put each whole table on one reducer.  Without ``offsets`` the
+    summary pass runs here first.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("ftype").orderBy(
-        F.desc("level"), "tile_y", "tile_x", "seq"
-    )
-    return features.where("fid IS NULL").withColumn(
-        "fid", (F.row_number().over(w) - 1).cast("long")
-    )
-
+    if offsets is None:
+        offsets = traversal_summary(features).offsets(features.sparkSession)
+    numbered = features.where("fid IS NULL").join(F.broadcast(offsets), _TILE)
+    return numbered.select(*[
+        (F.col("off") + F.col("seq")).alias("fid") if c == "fid" else c
+        for c in features.columns
+    ])

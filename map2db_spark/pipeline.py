@@ -5,20 +5,26 @@ Spark-first restatement of the reference's ``map2db(src, dst)``
 
 driver:    header + tile index parse (KB-scale)            [sources/header]
 executors: manifest -> mapInPandas decode + geometry prep  [operators/decode]
-           (ftype, fid) shuffle, then ONE mapInPandas that
-           consolidates and merges lines (dbl)             [operators/consolidate,
+executors: traversal summary, one mapInArrow: vtag column
+           order + non-dbl per-tile id offsets             [operators/consolidate]
+           dbl: (ftype, fid) shuffle, then ONE mapInPandas
+           that consolidates and merges lines; non-dbl:
+           offset + seq ids via a broadcast join           [operators/consolidate,
                                                             operators/linemerge]
 executors: parquet sink (the default), one write job       [sinks/parquet_sink]
-driver:    SQLite export sink + TOML config                [sinks/]
+executors: SQLite shards, one mapInArrow                   [sinks/sqlite_sink]
+driver:    shard merge (ATTACH + INSERT … SELECT) + TOML   [sinks/]
 
 The plan is lazy end to end and checkpoints nothing; the only
-driver-side data movements are the collected vtag key set (tiny), the
-parquet footers' row counts and the Arrow batches streamed into the
-SQLite file.  A parquet conversion of the dbl fixture runs 7 Spark
-jobs (AQE submits one per shuffle stage): the vtag key order's
-collect, which decodes into the feature cache, and the one write over
-the (ftype, fid) and (ftype, level) exchanges
-(tests/test_plans.py::test_dbl_parquet_conversion_job_budget).
+driver-side data movements are the collected traversal summary (a few
+rows per tile and per tag key), the parquet footers' row counts and the
+SQLite shards' paths and counts.  A parquet conversion of the dbl
+fixture runs 7 Spark jobs (AQE submits one per shuffle stage): the
+traversal summary, which decodes into the feature cache, and the one
+write over the (ftype, fid) and (ftype, level) exchanges
+(tests/test_plans.py::test_dbl_parquet_conversion_job_budget); a
+SQLite conversion of either fixture runs at most 5
+(test_sqlite_conversion_job_budget).
 """
 
 from __future__ import annotations
@@ -31,14 +37,11 @@ from map2db_spark.operators.consolidate import (
     assign_ids,
     by_feature,
     consolidate_kernel,
+    traversal_summary,
 )
 from map2db_spark.operators.decode import decode_features
 from map2db_spark.operators.linemerge import merge_line_geoms
-from map2db_spark.sinks.sqlite_sink import (
-    readme_license,
-    vtag_key_order,
-    write_sqlite,
-)
+from map2db_spark.sinks.sqlite_sink import readme_license, write_sqlite
 from map2db_spark.sinks.toml_sink import write_config
 from map2db_spark.sources.header import MapHeader, build_manifest, nonempty, read_header
 
@@ -80,12 +83,15 @@ def _consolidate_and_merge(feats: DataFrame, header: MapHeader) -> DataFrame:
     return by_feature(feats).mapInPandas(kernel, schema=CONSOLIDATED_SCHEMA)
 
 
-def _final_features(feats: DataFrame, header: MapHeader) -> DataFrame:
+def _final_features(
+    feats: DataFrame, header: MapHeader, offsets: DataFrame | None = None
+) -> DataFrame:
     """Reject-free decoded features -> final feature rows (dbl:
-    consolidated + line-merged; non-dbl: deterministically numbered
-    raw rows)."""
+    consolidated + line-merged; non-dbl: raw rows numbered from the
+    per-tile ``offsets`` of ``traversal_summary``, computed here when
+    not given)."""
     if not header.is_dbl:
-        return assign_ids(feats).select(
+        return assign_ids(feats, offsets).select(
             "ftype", "fid", "level", "minz", "maxz", "layer", "tags", "vtags", "geom",
             F.lit(None).cast("string").alias("violation"),
         )
@@ -98,7 +104,9 @@ def consolidated_features(
     """map file -> final feature rows.  Unreparable geometries
     (ftype='reject', F7/G4) are excluded, as the reference discards
     them (map2db.py:996-1011); they stay queryable in
-    load_features(...), with the reason under vtags['m2db:reject']."""
+    load_features(...), with the reason under vtags['m2db:reject'].
+    For a non-dbl map the call runs the traversal summary (one pass
+    over the decoded features) for the id offsets."""
     header = header or read_header(src)
     feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
     return _final_features(feats, header)
@@ -122,9 +130,9 @@ def map2db(
       reference at the 10^5-tile scale vs 29-36x for the single-file
       SQLite drain.
     - ``sink="sqlite"`` (the EXPORT FORMAT, reference parity): the FDO
-      RFC 16 single-file geodatabase (map2db.py:1311-1532), streamed
-      from an executor-written temp parquet through one driver
-      connection.
+      RFC 16 single-file geodatabase (map2db.py:1311-1532): executors
+      write SQLite shards in parallel and the driver merges them with
+      ``ATTACH`` + ``INSERT … SELECT`` in primary-key order.
 
     Both sinks consume the identical ``final`` DataFrame — agreement
     is pinned table-by-table in tests/test_pipeline_e2e.py
@@ -148,14 +156,18 @@ def map2db(
     feats = load_features(spark, src_pathname, header).where(
         F.col("ftype") != "reject"  # unreparable geometry: discarded, per reference
     )
-    # cache: the feature scan feeds consolidation AND vtag-order; at
-    # export scale this is the working set, materialized once
+    # cache: the feature scan feeds the summary AND the final frame;
+    # at export scale this is the working set, materialized once
     feats.persist()
     try:
-        final = _final_features(feats, header)
+        # the first action: decodes into the cache and yields the vtag
+        # column order and the non-dbl id offsets
+        summary = traversal_summary(feats)
+        offsets = None if header.is_dbl else summary.offsets(spark)
+        final = _final_features(feats, header, offsets)
         if sink == "sqlite":
             result = write_sqlite(
-                out_pathname, src_pathname, header, final, feats
+                out_pathname, src_pathname, header, final, feats, summary
             )
         else:
             from map2db_spark.sinks.parquet_sink import (
@@ -164,7 +176,7 @@ def map2db(
                 write_parquet,
             )
 
-            vtag_cols = vtag_key_order(feats)
+            vtag_cols = summary.vtag_order
             paths = write_parquet(final, out_pathname)
             manifest = write_manifest(
                 out_pathname, src_pathname, header, vtag_cols

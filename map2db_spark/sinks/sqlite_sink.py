@@ -2,11 +2,11 @@
 map2db.py:129-255 DDL + metadata emit 1398-1467, 1519-1527).
 
 The canonical large-scale output of this engine is partitioned parquet
-(parquet_sink.py); SQLite is an *export format* — a single-file
-database written on the driver from the final consolidated DataFrames
-via an executor-written temp parquet streamed back as pyarrow record
-batches (bounded driver memory: one batch at a time, never a full
-collect).
+(parquet_sink.py); SQLite is an *export format*, a single file.  The
+executors write the rows: each task of one ``mapInArrow`` pass fills a
+SQLite shard file with the target tables' columns.  The driver then
+merges the shards in C with ``ATTACH`` + ``INSERT … SELECT``; it never
+touches a row in Python.
 
 Schema parity: the reference grows feature tables with ALTER TABLE as
 new variable-tag keys appear mid-stream (map2db.py:860-871).  Here the
@@ -19,12 +19,19 @@ order.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sqlite3
+import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from map2db_spark.operators.consolidate import traversal_summary
 
 SRS_WKT = (
     "GEOGCS["
@@ -98,47 +105,130 @@ def vtag_key_order(features: DataFrame) -> dict[str, list[str]]:
     """First-sighting order of variable-tag keys per feature table
     (A4 + reference column-creation order, map2db.py:857-871).
 
-    Traversal order key: (level desc, tile_y, tile_x, seq) — the
-    reference's reverse-level row-major sweep.  One small aggregate;
-    result is collected (key sets are tiny)."""
-    exploded = features.select(
-        "ftype",
-        "level",
-        "tile_y",
-        "tile_x",
-        "seq",
-        F.posexplode(F.map_keys("vtags")).alias("pos", "key"),
-    ).select(
-        "ftype",
-        "key",
-        F.struct(
-            (-F.col("level")).alias("neg_level"),
-            F.col("tile_y"),
-            F.col("tile_x"),
-            F.col("seq"),
-            F.col("pos"),  # intra-feature insertion order of the map keys
-        ).alias("ord"),
-    )
-    firsts = (
-        exploded.groupBy("ftype", "key")
-        .agg(F.min("ord").alias("first_seen"))
-        .collect()
-    )
-    out: dict[str, list[str]] = {"point": [], "line": [], "area": []}
-    for ftype in out:
-        rows = [r for r in firsts if r["ftype"] == ftype]
-        rows.sort(key=lambda r: (tuple(r["first_seen"]), r["key"]))
-        out[ftype] = [r["key"] for r in rows]
-    return out
+    Traversal order key: (level desc, tile_y, tile_x, seq, position in
+    the feature's map) — the reference's reverse-level row-major sweep;
+    ties between keys break by key.  Read from one traversal-summary
+    pass (operators/consolidate.traversal_summary)."""
+    return traversal_summary(features).vtag_order
 
 
-def _tags_json(s):
-    """A Series of tag lists as JSON strings.  Module level, so a Python
-    worker unpickles it by reference: it imports this package, which
-    pins the worker's zip directories (``session``)."""
-    return s.map(
-        lambda t: json.dumps(list(t) if t is not None else [], ensure_ascii=False)
+def _quoted(cols: list[str]) -> str:
+    # quoted identifiers: tag keys like roof:colour are legal column
+    # names only when quoted (the reference's unquoted ALTER TABLE
+    # would fail on them — intended semantics kept, syntax fixed)
+    return ",".join('"' + c.replace('"', '""') + '"' for c in cols)
+
+
+SHARD_SCHEMA = "path STRING, points LONG, lines LONG, areas LONG"
+_SHARD_ARROW = pa.schema(
+    [("path", pa.string())] + [(t, pa.int64()) for t in TABLE_FOR_FTYPE.values()]
+)
+
+
+def _py_values(col: pa.Array) -> list:
+    """The column's values as Python objects, as ``to_pylist`` gives
+    them, through numpy where that is exact: a null-free number column,
+    or a string or binary column (whose nulls stay None)."""
+    t = col.type
+    number = pa.types.is_integer(t) or pa.types.is_floating(t)
+    if (number and not col.null_count) or pa.types.is_string(t) or pa.types.is_binary(t):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    return col.to_pylist()
+
+
+def _tags_as_json(tags: pa.Array) -> list[str]:
+    """``json.dumps(list(t), ensure_ascii=False)`` of every tag list
+    (``[]`` for a null list), the reference's m2db_tags text: each
+    distinct tag string is encoded once, then Arrow joins the encoded
+    items of each row with ``", "``, the separator json.dumps uses."""
+    items = tags.flatten().dictionary_encode()
+    words = pa.array(
+        [json.dumps(w, ensure_ascii=False) for w in items.dictionary.to_pylist()],
+        pa.string(),
     )
+    lengths = pc.fill_null(pc.list_value_length(tags), 0).to_numpy()
+    offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]), pa.int32())
+    encoded = pa.ListArray.from_arrays(
+        offsets, pc.fill_null(words.take(items.indices), "null")
+    )
+    joined = pc.binary_join_element_wise("[", pc.binary_join(encoded, ", "), "]", "")
+    return joined.to_numpy(zero_copy_only=False).tolist()
+
+
+def write_shard(batches, tmpd: str, layout: dict):
+    """The ``mapInArrow`` kernel behind ``write_features``: a task's
+    final rows -> one SQLite shard file under ``tmpd`` holding the
+    three tables with the target column lists (untyped, so each value
+    keeps the storage class its Python value binds to; the target's
+    affinities apply at the merge, as they would on a direct insert).
+    Tags become the reference's ``json.dumps`` text here.  ``layout``
+    maps ftype -> (table, target columns, source columns).  Yields one
+    row: the shard's path and its per-table row counts; an empty task
+    writes no file.  Module level and bound with ``functools.partial``,
+    so a worker unpickles it by reference: it imports this package,
+    which pins the worker's zip directories (``session``)."""
+    con = None
+    counts = dict.fromkeys(TABLE_FOR_FTYPE.values(), 0)
+    try:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            if con is None:
+                path = os.path.join(tmpd, f"shard-{uuid.uuid4().hex}.db")
+                con = sqlite3.connect(path)
+                con.execute("PRAGMA journal_mode=OFF;")
+                con.execute("PRAGMA synchronous=OFF;")
+                for table, cols, _ in layout.values():
+                    con.execute(f"CREATE TABLE {table} ({_quoted(cols)});")
+            ftypes = rb.column("ftype")
+            for ftype, (table, cols, src) in layout.items():
+                sub = rb.filter(pc.equal(ftypes, ftype))
+                if not sub.num_rows:
+                    continue
+                values = [
+                    _tags_as_json(sub.column(c)) if c == "tags" else _py_values(sub.column(c))
+                    for c in src
+                ]
+                con.executemany(
+                    f"INSERT INTO {table} VALUES ({','.join(['?'] * len(cols))});",
+                    zip(*values),
+                )
+                counts[table] += sub.num_rows
+        if con is None:
+            return
+        con.commit()
+    finally:
+        if con is not None:
+            con.close()
+    yield pa.RecordBatch.from_pylist([{"path": path, **counts}], schema=_SHARD_ARROW)
+
+
+def merge_shards(dbc: sqlite3.Connection, paths: list[str], layout: dict) -> None:
+    """Copy the shards' rows into the target tables, in C: every shard
+    is ATTACHed and appended to a temp staging table per table, then
+    each table is filled from its staging table in primary-key order.
+
+    The ordered fill keeps the file dense: shards of hash-partitioned
+    tasks interleave their id ranges, and appending them shard by
+    shard into the rowid b-tree left half-full pages (the 35.8k-feature
+    ``sqlite-export`` map at local[8]: 1227 pages against 1045)."""
+    for table, cols, _ in layout.values():
+        dbc.execute(f"CREATE TEMP TABLE stage_{table} ({_quoted(cols)});")
+    for path in paths:
+        dbc.commit()  # ATTACH and DETACH run outside a transaction
+        dbc.execute("ATTACH DATABASE ? AS shard;", (path,))
+        for table, _, _ in layout.values():
+            dbc.execute(f"INSERT INTO temp.stage_{table} SELECT * FROM shard.{table};")
+        dbc.commit()
+        dbc.execute("DETACH DATABASE shard;")
+    for table, cols, _ in layout.values():
+        col_list = _quoted(cols)
+        dbc.execute(
+            f"INSERT INTO main.{table} ({col_list}) SELECT {col_list}"
+            f" FROM temp.stage_{table} ORDER BY {_quoted(cols[:1])};"
+        )
+        dbc.execute(f"DROP TABLE temp.stage_{table};")
+    dbc.commit()
 
 
 def write_features(
@@ -146,8 +236,10 @@ def write_features(
     consolidated: DataFrame,
     vtag_cols: dict[str, list[str]],
 ) -> dict[str, int]:
-    """Stream the consolidated features into the three tables in ONE
-    pass with driver-side dispatch onto per-table prepared INSERTs.
+    """Write the final features into the three tables in ONE pass over
+    ``consolidated``: executors write SQLite shards in parallel
+    (``write_shard``), the driver merges them (``merge_shards``).
+    Returns the per-table row counts, summed from the shards.
 
     A per-table filtered pass would re-execute the entire
     consolidate + merge plan upstream once per table (the final
@@ -156,57 +248,41 @@ def write_features(
     throughput fixture, three passes made the sink 3x the cost of
     the whole compute pipeline.
 
-    Transport is a temp parquet PARTITIONED BY ftype, written by the
-    EXECUTORS with every per-row transformation already applied —
-    tags serialized to the reference's json.dumps format in a
-    vectorized pandas UDF, variable tags flattened to typed columns
-    (the reference's int/float coercions as Spark casts) — so the
-    driver drain is a pure ``zip()`` of pyarrow column lists into
-    executemany, with NO per-row Python.  Measured motivation, on
-    progressively larger fixtures: three filtered passes re-ran the
-    upstream plan 3x (23k features); toLocalIterator deserialized
-    Rows at ~25k rows/s (248k features); and driver-side per-row
-    dict/json work was the remaining serial bottleneck at 5.2M
-    features.  Driver memory stays one record batch.  No sort and no
-    extra shuffle: insert order is whatever the upstream partitioning
-    produced (deterministic per plan), which is semantically free —
-    rows are PK-addressed, the reference itself inserts in traversal
-    order, and a repartitionByRange here would re-execute the whole
-    upstream plan for range sampling (measured +1.5 s)."""
-    import glob
+    Measured history of the transport, on progressively larger
+    fixtures: toLocalIterator deserialized Rows at ~25k rows/s (248k
+    features); driver-side per-row dict/json work was the serial floor
+    at 5.2M features; an executor-written temp parquet (tags as JSON in
+    a pandas UDF, variable tags as typed columns) drained by one driver
+    thread (``to_pylist`` + ``executemany``) still spent ~0.5 s of
+    driver Python on the 35.8k-feature ``sqlite-export`` map, and its
+    write was keyed by ftype, so one task held two of the three tables.
+    Now the executors do the row work in parallel (tag JSON in Arrow
+    through ``_tags_as_json``, binding in ``executemany``), and the
+    driver's share is the C-level ``INSERT … SELECT`` merge.
+    Variable tags are flattened to typed columns by Spark casts (the
+    reference's int/float coercions).  Only shard paths the collect
+    returned are merged, so a failed attempt's file is ignored; the
+    temp dir is removed on every exit."""
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
-
-    counts = {"points": 0, "lines": 0, "areas": 0}
-    sqls: dict[str, str] = {}
-    extras: dict[str, list[str]] = {}
-    for ftype, table in TABLE_FOR_FTYPE.items():
-        extra = vtag_cols.get(ftype, [])
-        for col in extra:
-            # quoted identifiers: tag keys like roof:colour are legal
-            # column names only when quoted (the reference's unquoted
-            # ALTER TABLE would fail on them — intended semantics kept,
-            # syntax fixed)
-            quoted = col.replace('"', '""')
-            dbc.execute(f'ALTER TABLE {table} ADD COLUMN "{quoted}";')
-        pk = PK_FOR_FTYPE[ftype]
-        cols = [pk] + FIXED_COLS + list(extra)
-        col_list = ",".join('"' + c.replace('"', '""') + '"' for c in cols)
-        sqls[ftype] = (
-            f"INSERT INTO {table} ({col_list})"
-            f" VALUES ({','.join(['?'] * len(cols))});"
-        )
-        extras[ftype] = list(extra)
-
-    # union of all tables' vtag keys, flattened to stable column names
     union_keys: list[str] = []
-    for ftype in TABLE_FOR_FTYPE:
-        for k in extras[ftype]:
-            if k not in union_keys:
-                union_keys.append(k)
+    for ftype, table in TABLE_FOR_FTYPE.items():
+        for col in vtag_cols.get(ftype, []):
+            dbc.execute(f"ALTER TABLE {table} ADD COLUMN {_quoted([col])};")
+            if col not in union_keys:
+                union_keys.append(col)
+    # union of all tables' vtag keys, flattened to stable column names
     key_col = {k: f"vt_{i}" for i, k in enumerate(union_keys)}
+    base = ["fid", "level", "minz", "maxz", "geom", "layer", "tags"]
+    layout = {
+        ftype: (
+            table,
+            [PK_FOR_FTYPE[ftype]] + FIXED_COLS + list(vtag_cols.get(ftype, [])),
+            base + [key_col[k] for k in vtag_cols.get(ftype, [])],
+        )
+        for ftype, table in TABLE_FOR_FTYPE.items()
+    }
 
     def _vt(k: str):
         c = F.col("vtags").getItem(k)
@@ -218,33 +294,20 @@ def write_features(
 
     tmpd = tempfile.mkdtemp(prefix="m2db_export_")
     try:
-        (
+        shards = (
             consolidated.select(
-                "ftype", "fid", "level", "minz", "maxz", "geom", "layer",
-                F.pandas_udf(_tags_json, "string")(F.col("tags"))
-                .alias("tags_json"),
-                *[_vt(k).alias(key_col[k]) for k in union_keys],
+                "ftype", *base, *[_vt(k).alias(key_col[k]) for k in union_keys]
             )
-            .write.mode("overwrite")
-            .partitionBy("ftype")
-            .parquet(tmpd)
+            .mapInArrow(
+                functools.partial(write_shard, tmpd=tmpd, layout=layout),
+                SHARD_SCHEMA,
+            )
+            .collect()
         )
-        base = ["fid", "level", "minz", "maxz", "geom", "layer", "tags_json"]
-        for ftype, table in TABLE_FOR_FTYPE.items():
-            read_cols = base + [key_col[k] for k in extras[ftype]]
-            for path in sorted(glob.glob(f"{tmpd}/ftype={ftype}/part-*")):
-                pf = pq.ParquetFile(path)
-                for rb in pf.iter_batches(
-                    batch_size=10_000, columns=read_cols
-                ):
-                    idx = {n: i for i, n in enumerate(rb.schema.names)}
-                    lists = [rb.column(idx[n]).to_pylist() for n in read_cols]
-                    dbc.executemany(sqls[ftype], zip(*lists))
-                    counts[table] += rb.num_rows
-        dbc.commit()
+        merge_shards(dbc, [r["path"] for r in shards], layout)
     finally:
         shutil.rmtree(tmpd, ignore_errors=True)
-    return counts
+    return {t: sum(r[t] for r in shards) for t in TABLE_FOR_FTYPE.values()}
 
 
 def readme_license(header, src_pathname: str) -> tuple[str, str]:
@@ -365,10 +428,17 @@ def write_sqlite(
     header,
     consolidated: DataFrame,
     features_for_vtag_order: DataFrame,
+    summary=None,
 ) -> dict:
+    """The SQLite export of ``consolidated``.  ``summary`` is the
+    ``traversal_summary`` of ``features_for_vtag_order`` when the
+    caller already has it; it gives the column order and, for a non-dbl
+    map, the row counts the written tables must hold."""
     if os.path.exists(db_pathname):
         os.remove(db_pathname)
-    vtag_cols = vtag_key_order(features_for_vtag_order)
+    if summary is None:
+        summary = traversal_summary(features_for_vtag_order)
+    vtag_cols = summary.vtag_order
     with sqlite3.connect(db_pathname) as dbc:
         # bulk-load pragmas: the export file is written once from
         # scratch, so crash-durability buys nothing — identical final
@@ -378,5 +448,14 @@ def write_sqlite(
         prepare_db(dbc)
         license_text = write_metadata(dbc, header, src_pathname)
         counts = write_features(dbc, consolidated, vtag_cols)
+        if not header.is_dbl:
+            expected = {
+                table: summary.totals.get(ftype, 0)
+                for ftype, table in TABLE_FOR_FTYPE.items()
+            }
+            if counts != expected:
+                raise RuntimeError(
+                    f"SQLite export wrote {counts}, the decoded features hold {expected}"
+                )
         finalize(dbc)
     return {"counts": counts, "license": license_text, "vtag_cols": vtag_cols}

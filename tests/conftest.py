@@ -12,8 +12,17 @@ if str(REPO) not in sys.path:
 
 @pytest.fixture(scope="session")
 def spark():
+    from pyspark import SparkContext
+
     from map2db_spark.session import get_spark
 
+    # Tests read job and stage info from the status tracker.  Its store
+    # keeps spark.ui.retainedStages (1000) stages and evicts skipped
+    # stages first, so once the suite has run 1000 stages a job that
+    # just ran can lose its skipped stages to a cleanup pass.  A JVM
+    # system property is read into the conf the session starts with.
+    SparkContext._ensure_initialized()
+    SparkContext._jvm.java.lang.System.setProperty("spark.ui.retainedStages", "1000000")
     s = get_spark("tests", cpus="8")
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -304,6 +304,67 @@ def test_export_typed_vtag_coercion_roundtrip(spark, tmp_path):
     assert isinstance(got[0][1], int) and isinstance(got[0][2], float)
 
 
+@pytest.mark.parametrize("name", ["nondbl", "multi_tile_dbl"])
+def test_export_file_dense_and_no_temp_dir(spark, tmp_path, monkeypatch, name):
+    """The shard merge fills each table in primary-key order, so the
+    export is as dense as a VACUUM INTO copy of itself, with no free
+    pages; the shard temp dir is gone after the run."""
+    import tempfile
+
+    from map2db_spark.sources.sample_maps import large_map
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    src = str(tmp_path / f"{name}.map")
+    if name == "nondbl":
+        nondbl_map().write(src)
+    else:
+        large_map().write(src)
+    out = str(tmp_path / "out.db")
+    result = map2db(spark, src, out, sink="sqlite")
+    assert sum(result["counts"].values()) > 0
+    if name != "nondbl":
+        assert result["dbl"] and result["counts"]["points"] > 1000
+    vacuumed = str(tmp_path / "vacuumed.db")
+    con = sqlite3.connect(out)
+    try:
+        con.execute("VACUUM INTO ?;", (vacuumed,))
+        pages = con.execute("PRAGMA page_count;").fetchone()[0]
+        assert con.execute("PRAGMA freelist_count;").fetchone()[0] == 0
+    finally:
+        con.close()
+    con = sqlite3.connect(vacuumed)
+    try:
+        assert con.execute("PRAGMA page_count;").fetchone()[0] == pages
+    finally:
+        con.close()
+    assert list(tmp.glob("m2db_export_*")) == []
+
+
+def test_export_failing_shard_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """A shard kernel that raises (here: a geometry column SQLite cannot
+    bind) fails the export and still removes the shard temp dir."""
+    import tempfile
+
+    from map2db_spark.sinks.sqlite_sink import prepare_db, write_features
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    df = spark.createDataFrame(
+        [("point", 1, 1, 9, 13, (1,), 0, ["kind=a"], {})],
+        "ftype STRING, fid LONG, level LONG, minz LONG, maxz LONG,"
+        " geom STRUCT<a: INT>, layer LONG, tags ARRAY<STRING>,"
+        " vtags MAP<STRING,STRING>",
+    )
+    with sqlite3.connect(str(tmp_path / "fail.db")) as dbc:
+        prepare_db(dbc)
+        with pytest.raises(Exception, match="not supported"):
+            write_features(dbc, df, {"point": [], "line": [], "area": []})
+    assert list(tmp.glob("m2db_export_*")) == []
+
+
 def test_sink_parity_parquet_vs_sqlite(spark, dbl_path, db, tmp_path_factory):
     """VERDICT r6 #6: the cluster-default parquet sink and the SQLite
     export consume the same final DataFrame — pin that they AGREE

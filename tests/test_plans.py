@@ -2234,3 +2234,99 @@ def test_dbl_final_features_one_python_stage(spark, tmp_path):
     above = lines[: exchanges[0]]
     assert sum("MapInPandas" in ln for ln in above) == 1, lines
     assert not any("Union" in ln for ln in lines), lines
+
+
+def _conversion_jobs(spark, src, out, sink, group):
+    """The job ids a map2db() call ran, counted in a job group."""
+    from map2db_spark.pipeline import map2db
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, f"{sink} conversion")
+    try:
+        map2db(spark, src, out, sink=sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("name", ["nondbl_map", "dbl_map"])
+def test_sqlite_conversion_job_budget(spark, tmp_path, name):
+    """A SQLite map2db() is the traversal-summary pass that decodes into
+    the feature cache, then one shard-writing pass over the final frame
+    (plus AQE's per-shuffle-stage jobs): at most 5 Spark jobs, where
+    the vtag aggregate, the per-ftype window and the temp parquet ran 6."""
+    from map2db_spark.sources import sample_maps
+
+    src = str(tmp_path / f"{name}.map")
+    getattr(sample_maps, name)().write(src)
+    jobs = _conversion_jobs(
+        spark, src, str(tmp_path / "out.db"), "sqlite", f"sqlite-job-budget-{name}"
+    )
+    assert 0 < len(jobs) <= 5, sorted(jobs)
+
+
+def test_nondbl_final_features_no_window(spark, tmp_path):
+    """Non-dbl ids are per-tile offsets plus the decoder's seq, joined
+    as a broadcast: no Window and no exchange keyed by ftype, which
+    numbered each whole table on one reducer."""
+    from pyspark.sql import functions as F
+
+    from map2db_spark.pipeline import _final_features, load_features
+    from map2db_spark.sources.header import read_header
+    from map2db_spark.sources.sample_maps import nondbl_map
+
+    src = str(tmp_path / "nondbl.map")
+    nondbl_map().write(src)
+    header = read_header(src)
+    feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        _final_features(feats, header).explain()
+    plan = buf.getvalue()
+    assert "Window" not in plan, plan
+    assert not re.search(r"hashpartitioning\(ftype#", plan), plan
+    assert "BroadcastHashJoin" in plan, plan
+
+
+def _final_plan_tree(description: str) -> str:
+    """The executed (AQE final) plan tree of a physical plan
+    description from the SQL status store."""
+    tree = description.split("\n\n")[0].splitlines()
+    start = tree.index("+- == Final Plan ==")
+    end = tree.index("+- == Initial Plan ==")
+    return "\n".join(tree[start + 1:end])
+
+
+def test_sqlite_export_one_map_in_arrow(spark, tmp_path):
+    """The SQLite export runs one MapInArrow (the shard writer) over the
+    final frame and no ArrowEvalPython: the tags-to-JSON pandas UDF is
+    gone, the shard kernel serializes them."""
+    import time
+
+    from map2db_spark.pipeline import map2db
+    from map2db_spark.sources.sample_maps import nondbl_map
+
+    src = str(tmp_path / "nondbl.map")
+    nondbl_map().write(src)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = {e.executionId() for e in executions()}
+    map2db(spark, src, str(tmp_path / "out.db"), sink="sqlite")
+    deadline = time.time() + 30
+    while True:  # the status store fills asynchronously
+        export = [
+            e for e in executions()
+            if e.executionId() not in seen and "sqlite_sink.py" in e.description()
+        ]
+        if export and export[0].completionTime().isDefined() or time.time() > deadline:
+            break
+        time.sleep(0.2)
+    assert len(export) == 1, [e.description() for e in export]
+    tree = _final_plan_tree(export[0].physicalPlanDescription())
+    assert len(re.findall(r"\bMapInArrow \(\d+\)", tree)) == 1, tree
+    assert "ArrowEvalPython" not in tree, tree
