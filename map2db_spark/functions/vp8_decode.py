@@ -524,7 +524,7 @@ def decode_vp8(buf: bytes, with_stats: bool = False,
     input and NotImplementedError outside the documented envelope.
 
     max_pixels is the decompression-bomb rail shared by the codec
-    family (deflate/zstd's max_output convention): a 30-byte stream
+    family (deflate's max_output convention): a 30-byte stream
     can declare 16383x16383 and would otherwise force a ~10^6-
     macroblock walk before any content-level check can fire."""
     hdr = decode_vp8_header(buf)  # validates container + keyframe bit

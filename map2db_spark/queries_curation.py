@@ -14,10 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map2db_spark.functions import curation as C
+from map2db_spark.queries_pipeline import _TOKS_SQL
 from map2db_spark.registry import query
 from map2db_spark.tables import Tables
-
-_TOKS_SQL = r"regexp_split_to_array(trim(text), '\s+')"
 
 
 def _grams_sql(n: int, distinct: bool = True) -> str:

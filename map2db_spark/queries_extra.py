@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map2db_spark.functions import similarity as S
+from map2db_spark.queries_pipeline import _TOKS_SQL
 from map2db_spark.registry import query
 from map2db_spark.tables import Tables
 
@@ -255,8 +256,6 @@ def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_cap=_SEM_CELL_CAP,
     )
 
-
-_TOKS_SQL = r"regexp_split_to_array(trim(text), '\s+')"
 
 # identical char-for-char mapping on both sides (translate() has the
 # same per-character semantics in Spark and DuckDB)

@@ -45,6 +45,24 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hex_bigint(expr: str, tag: str, nhex: int = 8) -> str:
+    """DuckDB md5-derived pseudo-random BIGINT (the registry idiom)."""
+    return (
+        f"CAST(concat('0x', substr(md5('{tag}' || CAST({expr} AS VARCHAR)),"
+        f" 1, {nhex})) AS BIGINT)"
+    )
+
+
+def _hexcol(col, tag: str, nhex: int = 8):
+    """Spark twin of :func:`_hex_bigint` (col may be a Column)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(
+        F.substring(F.md5(F.concat(F.lit(tag), c.cast("string"))), 1, nhex),
+        16,
+        10,
+    ).cast("long")
+
+
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------

@@ -35,6 +35,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from map2db_spark.queries_pipeline import _hex_bigint
 from map2db_spark.registry import query
 from map2db_spark.tables import Tables
 
@@ -139,14 +140,6 @@ def f_tar_shard_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PK_TASKS = 500
 _PK_KS = (1, 4, 8)
-
-
-def _hex_bigint(expr: str, tag: str) -> str:
-    """DuckDB md5-derived pseudo-random BIGINT (the registry idiom)."""
-    return (
-        f"CAST(concat('0x', substr(md5('{tag}' || CAST({expr} AS VARCHAR)),"
-        " 1, 8)) AS BIGINT)"
-    )
 
 
 def _pass_at_k_sql(k: int) -> str:

@@ -26,25 +26,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from map2db_spark.queries_pipeline import _hex_bigint, _hexcol
 from map2db_spark.registry import query
 from map2db_spark.tables import Tables
-
-
-def _hex_bigint(expr: str, tag: str) -> str:
-    """DuckDB md5-derived pseudo-random BIGINT (the registry idiom)."""
-    return (
-        f"CAST(concat('0x', substr(md5('{tag}' || CAST({expr} AS VARCHAR)),"
-        " 1, 8)) AS BIGINT)"
-    )
-
-
-def _hexcol(col: str, tag: str):
-    """Spark twin of :func:`_hex_bigint`."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(tag), F.col(col).cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
 
 
 # ---------------------------------------------------------------------------

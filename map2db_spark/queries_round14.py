@@ -37,29 +37,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from map2db_spark.queries_pipeline import _TOKS_SQL, _hex_bigint, _hexcol
 from map2db_spark.registry import query
 from map2db_spark.tables import Tables
-
-_TOKS_SQL = r"regexp_split_to_array(trim(text), '\s+')"
-
-
-def _hex_bigint(expr: str, tag: str, nhex: int = 8) -> str:
-    """DuckDB md5-derived pseudo-random BIGINT (the registry idiom)."""
-    return (
-        f"CAST(concat('0x', substr(md5('{tag}' || CAST({expr} AS VARCHAR)),"
-        f" 1, {nhex})) AS BIGINT)"
-    )
-
-
-def _hexcol(col: str, tag: str, nhex: int = 8):
-    """Spark twin of :func:`_hex_bigint`."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(tag), F.col(col).cast("string"))), 1, nhex
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 # ---------------------------------------------------------------------------

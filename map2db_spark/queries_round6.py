@@ -1125,357 +1125,6 @@ def m_gif_giflib_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block codec (round 6)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "m_lz4_parity",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) * 6 AS BIGINT) AS raw_len,
-           TRUE AS ours_to_ref_ok,
-           TRUE AS ref_to_ours_ok,
-           TRUE AS compresses,
-           TRUE AS rle_overlap_ok
-    FROM documents WHERE doc_id < 60
-    """,
-    tags=("multimodal", "compression", "external-parity", "lz4"),
-)
-def m_lz4_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL bit-parity for the from-scratch LZ4 block codec
-    (functions/lz4_codec.py: token-packed sequences, 255-byte length
-    extensions, LE16 offsets, the spec's last-5-literals /
-    no-match-in-last-12 end rules, greedy hash-table matcher) against
-    the REAL system liblz4 1.9.4 via its flat ctypes API, both
-    directions per document: ours_to_ref_ok = OUR block decodes
-    byte-exactly under LZ4_decompress_safe; ref_to_ours_ok =
-    LZ4_compress_default's block decodes byte-exactly under OUR
-    decoder.  The payload is the document text amplified 6x (so
-    compresses pins a real <1/2 ratio), and rle_overlap_ok pins the
-    offset<match_len overlapping-copy path (LZ4's RLE trick) through
-    both decoders.  LZ4 is the analytics-stack workhorse (parquet
-    pages, shuffle, Kafka) — the codec family's byte-oriented member.
-
-    Scale shape: map-only mapInPandas; payloads never shuffle and
-    never touch the driver."""
-    import pandas as pd
-
-    from map2db_spark.session import ship_package
-
-    ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
-        F.col("doc_id") < 60
-    ).select("doc_id", "text")
-
-    def kernel(batches):
-        from map2db_spark.functions import lz4_codec as L
-
-        if not L.available():
-            raise RuntimeError("m_lz4_parity needs system liblz4")
-        for pdf in batches:
-            out = {"media_id": [], "raw_len": [], "ours_to_ref_ok": [],
-                   "ref_to_ours_ok": [], "compresses": [],
-                   "rle_overlap_ok": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                raw = text.encode("utf-8") * 6
-                enc = L.lz4_compress(raw)
-                a = L.ref_decompress(enc, len(raw)) == raw
-                b = L.lz4_decompress(L.ref_compress(raw)) == raw
-                c = len(enc) * 2 < len(raw)
-                run = raw[:2] + raw[:1] * 700  # forces offset<match_len
-                e2 = L.lz4_compress(run)
-                d = (L.lz4_decompress(e2) == run
-                     and L.ref_decompress(e2, len(run)) == run
-                     and L.lz4_decompress(L.ref_compress(run)) == run)
-                out["media_id"].append(doc_id)
-                out["raw_len"].append(len(raw))
-                out["ours_to_ref_ok"].append(bool(a))
-                out["ref_to_ours_ok"].append(bool(b))
-                out["compresses"].append(bool(c))
-                out["rle_overlap_ok"].append(bool(d))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id LONG, raw_len LONG, ours_to_ref_ok BOOLEAN,"
-        " ref_to_ours_ok BOOLEAN, compresses BOOLEAN,"
-        " rle_overlap_ok BOOLEAN",
-    )
-
-
-# ---------------------------------------------------------------------------
-# bzip2 codec (round 6)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "m_bzip2_parity",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) * 8 AS BIGINT) AS raw_len,
-           TRUE AS ours_to_ref_ok,
-           TRUE AS ref_to_ours_ok,
-           TRUE AS crushes,
-           TRUE AS crc_rejects_corruption
-    FROM documents WHERE doc_id < 50
-    """,
-    tags=("multimodal", "compression", "external-parity", "bzip2"),
-)
-def m_bzip2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL bit-parity for the from-scratch bzip2 codec
-    (functions/bzip2_codec.py: RLE1 -> BWT over cyclic rotations
-    (numpy prefix-doubling sort) -> MTF -> RUNA/RUNB bijective-base-2
-    zero runs -> multi-table canonical Huffman with 50-symbol
-    selectors, MSB-first container, bzip2's non-reflected CRC-32 +
-    rotating combined CRC) against the REAL stdlib bz2 (libbz2), both
-    directions per document: ours_to_ref_ok = OUR stream decompresses
-    byte-exactly under bz2; ref_to_ours_ok = bz2.compress at level
-    1 + doc_id%9 decodes byte-exactly under OUR decoder (every level
-    crosses).  The payload is the text amplified 8x so crushes pins a
-    real <1/4 block-sorting ratio, and crc_rejects_corruption pins
-    that OUR decoder actually verifies the block CRC (a flipped bit
-    in the entropy area must raise).  The deepest member of the
-    compression family: four chained reversible transforms agreeing
-    bit-for-bit with an independent implementation.
-
-    Scale shape: map-only mapInPandas; payloads never shuffle and
-    never touch the driver."""
-    import pandas as pd
-
-    from map2db_spark.session import ship_package
-
-    ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
-        F.col("doc_id") < 50
-    ).select("doc_id", "text")
-
-    def kernel(batches):
-        import bz2 as Z
-
-        from map2db_spark.functions import bzip2_codec as B
-
-        for pdf in batches:
-            out = {"media_id": [], "raw_len": [], "ours_to_ref_ok": [],
-                   "ref_to_ours_ok": [], "crushes": [],
-                   "crc_rejects_corruption": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                raw = text.encode("utf-8") * 8
-                enc = B.bzip2_compress(raw)
-                a = Z.decompress(enc) == raw
-                z = Z.compress(raw, 1 + doc_id % 9)
-                b = B.bzip2_decompress(z, max_output=1 << 24) == raw
-                c = len(enc) * 4 < len(raw)
-                bad = bytearray(enc)
-                bad[len(bad) // 2] ^= 0x10
-                try:
-                    B.bzip2_decompress(bytes(bad))
-                    d = False
-                except ValueError:
-                    d = True
-                out["media_id"].append(doc_id)
-                out["raw_len"].append(len(raw))
-                out["ours_to_ref_ok"].append(bool(a))
-                out["ref_to_ours_ok"].append(bool(b))
-                out["crushes"].append(bool(c))
-                out["crc_rejects_corruption"].append(bool(d))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id LONG, raw_len LONG, ours_to_ref_ok BOOLEAN,"
-        " ref_to_ours_ok BOOLEAN, crushes BOOLEAN,"
-        " crc_rejects_corruption BOOLEAN",
-    )
-
-
-# ---------------------------------------------------------------------------
-# zstd codec (round 6)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "m_zstd_parity",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) * 8 AS BIGINT) AS raw_len,
-           TRUE AS ref_to_ours_ok,
-           TRUE AS ours_to_ref_ok,
-           TRUE AS crushes,
-           TRUE AS checksum_enforced
-    FROM documents WHERE doc_id < 50
-    """,
-    tags=("multimodal", "compression", "external-parity", "zstd"),
-)
-def m_zstd_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL bit-parity for the from-scratch Zstandard decoder
-    (functions/zstd_codec.py: RFC 8878 frames, all block types, FSE
-    table construction from bitstream descriptions AND the predefined
-    distributions, direct + FSE-compressed Huffman weights with the
-    two-interleaved-states backward stream, 1- and 4-stream literals,
-    treeless repeats, sequences with repeat-offset history incl. the
-    literals_length==0 shift rule, own-XXH64 content checksums)
-    against the REAL system libzstd 1.5.4: ref_to_ours_ok = libzstd's
-    output at level 1 + doc_id%22 decodes byte-exactly under OUR
-    decoder (every level crosses the window, sweeping predefined vs
-    FSE-described tables and 1- vs 4-stream literals);
-    ours_to_ref_ok = OUR frames — both the entropy-coded path
-    (greedy-matcher sequences FSE-ENCODED through mirror state
-    tables with the predefined distributions + raw literals) and the
-    store profile — round-trip byte-exactly under ZSTD_decompress.
-    crushes pins a real <1/3 ratio on the 8x-amplified text for BOTH
-    libzstd's stream and ours; checksum_enforced pins
-    that OUR decoder verifies the XXH64 (a flipped payload byte must
-    raise).  zstd is THE parquet/shuffle codec of the modern analytics
-    stack — the family's entropy-coded flagship.
-
-    Scale shape: map-only mapInPandas; payloads never shuffle and
-    never touch the driver."""
-    import pandas as pd
-
-    from map2db_spark.session import ship_package
-
-    ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
-        F.col("doc_id") < 50
-    ).select("doc_id", "text")
-
-    def kernel(batches):
-        from map2db_spark.functions import zstd_codec as Z
-
-        if not Z.available():
-            raise RuntimeError("m_zstd_parity needs system libzstd")
-        for pdf in batches:
-            out = {"media_id": [], "raw_len": [], "ref_to_ours_ok": [],
-                   "ours_to_ref_ok": [], "crushes": [],
-                   "checksum_enforced": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                raw = text.encode("utf-8") * 8
-                lvl = 1 + doc_id % 22
-                enc = Z.ref_compress(raw, lvl)
-                a = Z.zstd_decompress(enc, max_output=1 << 24) == raw
-                ours = Z.zstd_compress(raw, checksum=True)
-                stored = Z.zstd_compress_stored(raw, checksum=True)
-                b = (Z.ref_decompress(ours, len(raw)) == raw
-                     and Z.zstd_decompress(ours) == raw
-                     and Z.ref_decompress(stored, len(raw)) == raw)
-                c = (len(enc) * 3 < len(raw)
-                     and len(ours) * 3 < len(raw))
-                bad = bytearray(ours)
-                bad[-10] ^= 1  # payload byte inside the last block
-                try:
-                    Z.zstd_decompress(bytes(bad))
-                    d = False
-                except ValueError:
-                    d = True
-                out["media_id"].append(doc_id)
-                out["raw_len"].append(len(raw))
-                out["ref_to_ours_ok"].append(bool(a))
-                out["ours_to_ref_ok"].append(bool(b))
-                out["crushes"].append(bool(c))
-                out["checksum_enforced"].append(bool(d))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id LONG, raw_len LONG, ref_to_ours_ok BOOLEAN,"
-        " ours_to_ref_ok BOOLEAN, crushes BOOLEAN,"
-        " checksum_enforced BOOLEAN",
-    )
-
-
-# ---------------------------------------------------------------------------
-# LZMA codec (round 6)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "m_lzma_parity",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) * 8 AS BIGINT) AS raw_len,
-           CAST((doc_id % 4) * 3 AS INTEGER) AS preset,
-           TRUE AS ref_to_ours_ok,
-           TRUE AS ours_to_ref_ok,
-           TRUE AS crushes
-    FROM documents WHERE doc_id < 50
-    """,
-    tags=("multimodal", "compression", "external-parity", "lzma"),
-)
-def m_lzma_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXTERNAL bit-parity for the from-scratch LZMA1 codec
-    (functions/lzma_codec.py: binary range decoder with 11-bit
-    adaptive probabilities, the 12-state machine, lc/lp/pb
-    context-modeled literals incl. the matched-literal path, match +
-    rep length coders, position-slot trees with SpecPos reverse
-    trees and Align bits, 4-deep rep-distance history, end-marker)
-    against the REAL stdlib lzma (liblzma), both directions per
-    document: ref_to_ours_ok = lzma.compress (FORMAT_ALONE, preset
-    cycling 0/3/6/9, plus a custom lc=0/lp=2/pb=0 filter spec every
-    5th row) decodes byte-exactly under OUR decoder; ours_to_ref_ok =
-    OUR range-coded literal-only stream (the honest encoder envelope)
-    decompresses byte-exactly under liblzma AND under our own
-    decoder.  crushes pins a real <1/4 ratio on the 8x-amplified
-    text.  Completes the stdlib trio: zlib, bz2, lzma all have
-    from-scratch counterparts verified against the real library.
-
-    Scale shape: map-only mapInPandas; payloads never shuffle and
-    never touch the driver."""
-    import pandas as pd
-
-    from map2db_spark.session import ship_package
-
-    ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
-        F.col("doc_id") < 50
-    ).select("doc_id", "text")
-
-    def kernel(batches):
-        import lzma as Z
-
-        from map2db_spark.functions import lzma_codec as L
-
-        for pdf in batches:
-            out = {"media_id": [], "raw_len": [], "preset": [],
-                   "ref_to_ours_ok": [], "ours_to_ref_ok": [],
-                   "crushes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                raw = text.encode("utf-8") * 8
-                preset = (doc_id % 4) * 3
-                if doc_id % 5 == 0:
-                    filt = [{"id": Z.FILTER_LZMA1, "lc": 0, "lp": 2,
-                             "pb": 0, "preset": max(preset, 1)}]
-                    z = Z.compress(raw, format=Z.FORMAT_ALONE,
-                                   filters=filt)
-                else:
-                    z = Z.compress(raw, format=Z.FORMAT_ALONE,
-                                   preset=preset)
-                a = L.lzma_decompress(z, max_output=1 << 24) == raw
-                ours = L.lzma_compress_literal(raw)
-                b = (Z.decompress(ours, format=Z.FORMAT_ALONE) == raw
-                     and L.lzma_decompress(ours) == raw)
-                c = len(z) * 4 < len(raw)
-                out["media_id"].append(doc_id)
-                out["raw_len"].append(len(raw))
-                out["preset"].append(preset)
-                out["ref_to_ours_ok"].append(bool(a))
-                out["ours_to_ref_ok"].append(bool(b))
-                out["crushes"].append(bool(c))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id LONG, raw_len LONG, preset INT,"
-        " ref_to_ours_ok BOOLEAN, ours_to_ref_ok BOOLEAN,"
-        " crushes BOOLEAN",
-    )
-
-
-# ---------------------------------------------------------------------------
 # VP8 (lossy WebP) full keyframe PIXEL decode (round 6)
 # ---------------------------------------------------------------------------
 

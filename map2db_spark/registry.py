@@ -196,7 +196,9 @@ _VERIFIED_BY_ROUND[7] = frozenset({
 # x_rater_kappa are NOT here either (r14 degenerate-input audit
 # guards -> re-grade); the 17
 # codec/external-parity queries, the 3 decimal re-grades, and 30
-# drained from the r4/r5 registration backlog — 50/50 green).
+# drained from the r4/r5 registration backlog — 50/50 green.  13 of
+# the 17 remain: the lz4/bzip2/zstd/lzma parity queries were retired
+# with their codecs).
 # m_gif_giflib_parity is deliberately NOT here: r9 changed
 # giflib_oracle.py's bomb rails (local-descriptor charge, ADVICE r8)
 # -> re-grade ---
@@ -204,8 +206,7 @@ _VERIFIED_BY_ROUND[6] = frozenset({
     "m_jpeg_progressive", "m_jpeg_sa_refinement", "m_jpeg_restart",
     "m_webp_libwebp_parity", "m_vp8_segmentation", "m_tiff_pixels",
     "m_tiff_libtiff_parity", "m_deflate_zlib_parity", "m_png_fromscratch",
-    "m_gif_pixels", "m_lz4_parity",
-    "m_bzip2_parity", "m_zstd_parity", "m_lzma_parity", "m_vp8_pixels",
+    "m_gif_pixels", "m_vp8_pixels",
     "m_png_libpng_parity", "x_gini_concentration",
     "w_cusum_changepoint", "x_calibration_bins", "w_seasonal_decompose",
     "f_variant_histogram", "x_dp_noisy_counts",

@@ -12,8 +12,10 @@ env vars for local testing:
   default parallelism (its union kernel is CPU-heavy on a few MB of
   shuffle, which AQE would fold into one task), so it is the task
   count of that stage.
-- Arrow on: every Python-side kernel in this engine is an Arrow-batched
-  pandas UDF / mapInPandas — never row-at-a-time Python.
+- Arrow on: every Python-side kernel in this engine is Arrow-batched —
+  a pandas UDF or ``mapInPandas``, or ``mapInArrow`` over RecordBatches
+  (the pipeline's traversal summary and the SQLite shard writer) —
+  never row-at-a-time Python.
 - session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle bit-for-bit.
 """
@@ -32,7 +34,7 @@ _PKG_SHIPPED: set[str] = set()
 def ship_package(spark: SparkSession) -> None:
     """Ship map2db_spark to executor Python workers via addPyFile.
 
-    Arrow kernels (mapInPandas/applyInPandas/pandas_udf) unpickle
+    Arrow kernels (mapInPandas/mapInArrow/applyInPandas/pandas_udf) unpickle
     references to this package on the worker side; workers only have
     the launch cwd on sys.path, so any session whose driver process
     didn't start inside the repo needs the zip.  Same mechanism ships

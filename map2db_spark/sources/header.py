@@ -192,16 +192,12 @@ def _manifest_chunk_rows(
         tx = sf.minx + tilenum % sf.x_count
         off = sf.offset + offs[i]
         end = sf.offset + (offs[i + 1] if i + 1 < len(offs) else sf.length)
-        rows.append(
-            (sf_idx, sf.level, sf.minzoom, sf.maxzoom, tx, ty, off, end)
-        )
+        rows.append((sf_idx, sf.level, tx, ty, off, end))
     return pd.DataFrame(
         rows,
         columns=[
             "subfile_idx",
             "level",
-            "minzoom",
-            "maxzoom",
             "tile_x",
             "tile_y",
             "offset",
@@ -211,8 +207,8 @@ def _manifest_chunk_rows(
 
 
 MANIFEST_SCHEMA = (
-    "subfile_idx INT, level INT, minzoom INT, maxzoom INT, "
-    "tile_x INT, tile_y INT, offset LONG, end_offset LONG"
+    "subfile_idx INT, level INT, tile_x INT, tile_y INT, "
+    "offset LONG, end_offset LONG"
 )
 
 CHUNK_ENTRIES = 65536  # tile-index entries per distributed read task

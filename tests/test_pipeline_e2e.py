@@ -365,6 +365,38 @@ def test_export_failing_shard_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
     assert list(tmp.glob("m2db_export_*")) == []
 
 
+def test_sqlite_export_count_guard_raises_on_missing_row(spark, tmp_path, monkeypatch):
+    """A non-dbl export whose written tables hold fewer rows than the
+    traversal summary counted (here: one final row removed) raises,
+    and the shard temp dir is still removed."""
+    import tempfile
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from map2db_spark.operators.consolidate import traversal_summary
+    from map2db_spark.pipeline import _final_features, load_features
+    from map2db_spark.sinks.sqlite_sink import write_sqlite
+    from map2db_spark.sources.header import read_header
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    src = str(Path(__file__).resolve().parents[1] / "fixtures" / "nondbl.map")
+    header = read_header(src)
+    assert not header.is_dbl
+    feats = load_features(spark, src, header).where(F.col("ftype") != "reject")
+    summary = traversal_summary(feats)
+    final = _final_features(feats, header, summary.offsets(spark))
+    gone = final.orderBy("ftype", "fid").first()
+    short = final.where(
+        (F.col("ftype") != gone["ftype"]) | (F.col("fid") != gone["fid"])
+    )
+    with pytest.raises(RuntimeError, match="SQLite export wrote"):
+        write_sqlite(str(tmp_path / "short.db"), src, header, short, feats, summary)
+    assert list(tmp.glob("m2db_export_*")) == []
+
+
 def test_sink_parity_parquet_vs_sqlite(spark, dbl_path, db, tmp_path_factory):
     """VERDICT r6 #6: the cluster-default parquet sink and the SQLite
     export consume the same final DataFrame — pin that they AGREE

@@ -1130,8 +1130,7 @@ def test_round6_codec_queries_map_only_no_shuffle(spark):
     for name in ("m_webp_libwebp_parity", "m_vp8_segmentation",
                  "m_tiff_pixels", "m_tiff_libtiff_parity",
                  "m_deflate_zlib_parity", "m_png_fromscratch",
-                 "m_gif_pixels", "m_gif_giflib_parity", "m_lz4_parity",
-                 "m_bzip2_parity", "m_zstd_parity", "m_lzma_parity"):
+                 "m_gif_pixels", "m_gif_giflib_parity"):
         plan = plan_of(spark, name)
         assert _exchange_count(plan) == 0, (name, plan)
         assert "CartesianProduct" not in plan, name
